@@ -10,6 +10,10 @@ sharing the same Arrow-batch update path.
 
 from cuckoo_filter_spark.params import CuckooParams, TABLE_SINGLE, TABLE_PACKED
 from cuckoo_filter_spark.kernel.filter import CuckooKernel, FilterFullError
+from cuckoo_filter_spark import zipimport_guard
+
+# Python workers only: stop the per-task zip-directory rescan
+zipimport_guard.install()
 
 __all__ = [
     "CuckooParams",

@@ -163,16 +163,22 @@ def build_checkpointed(
             # a crashed FIRST attempt can leave only Spark scratch
             # (_temporary, ._*-marker files) with nothing committed —
             # that is a fresh dir, not a corrupt resume; only real
-            # committed entries make the unreadability fatal
-            with os.scandir(sdir) as it:
-                has_committed = any(
-                    not e.name.startswith(("_", ".")) for e in it)
+            # committed entries make the unreadability fatal. A dir that
+            # cannot even be listed may hold committed shards: fatal too.
+            cause: BaseException = e
+            try:
+                with os.scandir(sdir) as it:
+                    has_committed = any(
+                        not e.name.startswith(("_", ".")) for e in it)
+            except OSError as scan_err:
+                has_committed, cause = True, scan_err
             if has_committed:
                 raise RuntimeError(
-                    f"checkpoint shards dir {sdir} is non-empty but "
-                    "unreadable — refusing to resume (recomputing would "
-                    "append duplicate shard rows); inspect or delete the "
-                    f"directory. Original error: {e!r}") from e
+                    f"checkpoint shards dir {sdir} may hold committed "
+                    "shards but is unreadable — refusing to resume "
+                    "(recomputing would append duplicate shard rows); "
+                    "inspect or delete the directory. Original error: "
+                    f"{cause!r}") from cause
             done = set()
 
     missing = sorted(set(range(num_shards)) - done)

@@ -96,3 +96,51 @@ def test_query_map_fits_the_driver_cap():
     assert set(o) == set(q), (
         f"oracle/query key drift: extra={sorted(set(o) - set(q))}, "
         f"missing_oracle={sorted(set(q) - set(o))}")
+
+
+def _fake_session(master):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+
+
+def test_scratch_dir_uses_shm_only_under_a_local_master(monkeypatch):
+    """Executors on other hosts never see the driver's /dev/shm: a
+    non-local master without SPARK_GRAFT_TMP falls back to the default
+    temp dir; SPARK_GRAFT_TMP wins under any master."""
+    import os
+    import shutil
+    import tempfile
+
+    monkeypatch.delenv("SPARK_GRAFT_TMP", raising=False)
+    for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
+        d = entry_mod._scratch_dir(_fake_session(master), "t_")
+        shutil.rmtree(d)
+        assert os.path.dirname(d) == tempfile.gettempdir(), master
+    if os.path.isdir("/dev/shm"):
+        for master in ("local", "local[4]", "local[*]"):
+            d = entry_mod._scratch_dir(_fake_session(master), "t_")
+            shutil.rmtree(d)
+            assert os.path.dirname(d) == "/dev/shm", master
+    base = tempfile.mkdtemp()
+    monkeypatch.setenv("SPARK_GRAFT_TMP", base)
+    for master in ("yarn", "local[4]"):
+        d = entry_mod._scratch_dir(_fake_session(master), "t_")
+        assert os.path.dirname(d) == base, master
+    shutil.rmtree(base)
+
+
+def test_stream_size_is_passed_not_shared(spark):
+    """The drain's input size travels from _stream_source to _run_stream
+    as an argument — no module-level side channel a later query could
+    read stale — and _run_stream cannot be called without it."""
+    import inspect
+    import os
+
+    assert not hasattr(entry_mod, "_LAST_STREAM_SRC_BYTES")
+    param = inspect.signature(entry_mod._run_stream).parameters["src_bytes"]
+    assert param.kind is param.KEYWORD_ONLY
+    assert param.default is param.empty
+    stream, src_bytes = entry_mod._stream_source(spark, SF_DIR, "events")
+    assert stream.isStreaming
+    assert src_bytes == os.path.getsize(f"{SF_DIR}/events.parquet")

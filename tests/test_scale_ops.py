@@ -622,3 +622,36 @@ def test_checkpoint_unreadable_nonempty_shards_refuses(spark, tmp_path):
     (sdir / "part-00000.parquet").write_bytes(b"not parquet at all")
     with pytest.raises(RuntimeError, match="refusing to resume"):
         build_checkpointed(df, "k", ck, capacity=100, num_shards=2)
+
+
+def test_checkpoint_unlistable_shards_dir_refuses(spark, tmp_path,
+                                                  monkeypatch):
+    """If the shards dir cannot be read AND cannot even be listed, the
+    listing's OSError is chained into the same refusal — it must not
+    escape raw, and the dir must not be treated as fresh."""
+    import os
+    import pathlib
+    import shutil
+
+    from cuckoo_filter_spark.operators import checkpoint
+    from cuckoo_filter_spark.operators.checkpoint import build_checkpointed
+
+    df = spark.createDataFrame([(i,) for i in range(100)], "k long")
+    ck = str(tmp_path / "ck")
+    build_checkpointed(df, "k", ck, capacity=100, num_shards=2)
+    sdir = pathlib.Path(ck) / "shards"
+    shutil.rmtree(sdir)
+    sdir.mkdir()
+    (sdir / "part-00000.parquet").write_bytes(b"not parquet at all")
+
+    real_scandir = os.scandir
+
+    def scandir(path="."):
+        if os.fspath(path) == str(sdir):
+            raise PermissionError(13, "Permission denied", str(sdir))
+        return real_scandir(path)
+
+    monkeypatch.setattr(checkpoint.os, "scandir", scandir)
+    with pytest.raises(RuntimeError, match="refusing to resume") as info:
+        build_checkpointed(df, "k", ck, capacity=100, num_shards=2)
+    assert isinstance(info.value.__cause__, PermissionError)
