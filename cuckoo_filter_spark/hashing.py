@@ -11,19 +11,29 @@ Two implementations:
 * :func:`metro64` — pure-Python scalar, a faithful re-derivation of the
   published algorithm. Used as the parity oracle in tests and for
   driver-side one-off hashing.
-* :func:`metro64_batch` — numpy-vectorized over a batch of
-  variable-length byte strings. This is the hot path used inside Arrow
-  pandas UDFs: the 32-byte block recurrence runs batched across all rows
+* :func:`metro64_flat` — numpy-vectorized over a batch of
+  variable-length byte strings laid end to end (Arrow's offsets + data
+  layout). The 32-byte block recurrence runs batched across all rows
   that still have blocks left, and the tail branches (16/8/4/2/1 bytes)
-  are applied with per-row masks. No per-row Python in the hot loop.
+  are applied to the rows whose length has that bit. No per-row Python
+  in the hot loop (only the last few rows of a long block run finish in
+  Python ints) and no padded per-row copy: memory is O(key bytes).
 
-Both are implemented from the published algorithm description; the test
-suite pins ``metro64_batch == metro64`` across lengths 0..200.
+:func:`metro64_keys` is the membership-key entry point every build,
+probe, router and delete shares: it cleans a key batch (NULLs out,
+integral identity restored) straight from its Arrow buffers and hashes
+it. :func:`metro64_batch` is the raw mapping (no NULL handling) the
+sketches use.
+
+Both hashes are implemented from the published algorithm description;
+the test suite pins ``metro64_batch == metro64`` across lengths 0..200.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 
 _K0 = 0xD6D018F5
 _K1 = 0xA2AA033B
@@ -38,6 +48,20 @@ def _rotr(x: int, r: int) -> int:
     return ((x >> r) | (x << (64 - r))) & _MASK64
 
 
+def _block_rounds(data, v0: int, v1: int, v2: int, v3: int):
+    """The 32-byte block recurrence over every whole block of ``data``."""
+    for off in range(0, len(data) - 31, 32):
+        v0 = (v0 + int.from_bytes(data[off : off + 8], "little") * _K0) & _MASK64
+        v0 = (_rotr(v0, 29) + v2) & _MASK64
+        v1 = (v1 + int.from_bytes(data[off + 8 : off + 16], "little") * _K1) & _MASK64
+        v1 = (_rotr(v1, 29) + v3) & _MASK64
+        v2 = (v2 + int.from_bytes(data[off + 16 : off + 24], "little") * _K2) & _MASK64
+        v2 = (_rotr(v2, 29) + v0) & _MASK64
+        v3 = (v3 + int.from_bytes(data[off + 24 : off + 32], "little") * _K3) & _MASK64
+        v3 = (_rotr(v3, 29) + v1) & _MASK64
+    return v0, v1, v2, v3
+
+
 def metro64(data: bytes, seed: int = DEFAULT_SEED) -> int:
     """Scalar MetroHash64 (seed defaults to the filter's 1337)."""
     h = ((seed + _K2) * _K0) & _MASK64
@@ -45,17 +69,8 @@ def metro64(data: bytes, seed: int = DEFAULT_SEED) -> int:
     off = 0
 
     if n >= 32:
-        v0 = v1 = v2 = v3 = h
-        while n - off >= 32:
-            v0 = (v0 + int.from_bytes(data[off : off + 8], "little") * _K0) & _MASK64
-            v0 = (_rotr(v0, 29) + v2) & _MASK64
-            v1 = (v1 + int.from_bytes(data[off + 8 : off + 16], "little") * _K1) & _MASK64
-            v1 = (_rotr(v1, 29) + v3) & _MASK64
-            v2 = (v2 + int.from_bytes(data[off + 16 : off + 24], "little") * _K2) & _MASK64
-            v2 = (_rotr(v2, 29) + v0) & _MASK64
-            v3 = (v3 + int.from_bytes(data[off + 24 : off + 32], "little") * _K3) & _MASK64
-            v3 = (_rotr(v3, 29) + v1) & _MASK64
-            off += 32
+        v0, v1, v2, v3 = _block_rounds(data, h, h, h, h)
+        off = n - n % 32
         v2 ^= (_rotr(((v0 + v3) * _K0 + v1) & _MASK64, 37) * _K1) & _MASK64
         v3 ^= (_rotr(((v1 + v2) * _K1 + v0) & _MASK64, 37) * _K0) & _MASK64
         v0 ^= (_rotr(((v0 + v2) * _K0 + v3) & _MASK64, 37) * _K1) & _MASK64
@@ -114,103 +129,68 @@ def _rotr_np(x: np.ndarray, r: int) -> np.ndarray:
     return (x >> r_) | (x << l_)
 
 
-def to_flat_bytes(items) -> tuple[np.ndarray, np.ndarray]:
-    """Normalize a batch of keys to (flat uint8 array, per-row lengths).
-
-    Accepts: pandas Series of str/bytes, pyarrow String/Binary arrays,
-    list/ndarray of bytes. Uses Arrow buffers when available so the hot
-    path does not touch per-row Python objects.
-    """
-    import pyarrow as pa
-
+def _as_arrow(items) -> pa.Array:
+    """A key batch as one ``pa.Array``: Arrow arrays pass through
+    (chunked ones are combined), a pandas Series converts with pandas'
+    NULL semantics (None and NaN become NULL), anything else goes
+    through ``pa.array``."""
     if isinstance(items, pa.ChunkedArray):
-        items = items.combine_chunks()
-    if not isinstance(items, pa.Array):
-        try:
-            import pandas as pd
+        return items.combine_chunks()
+    if isinstance(items, pa.Array):
+        return items
+    if isinstance(items, pd.Series):
+        arr = pa.Array.from_pandas(items)
+        return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    return pa.array(list(items))
 
-            if isinstance(items, pd.Series):
-                items = pa.Array.from_pandas(items)
-            else:
-                items = pa.array(list(items))
-        except (pa.ArrowInvalid, pa.ArrowTypeError):
-            # fall back: list of bytes objects
-            lens = np.fromiter((len(b) for b in items), dtype=np.int64)
-            flat = np.frombuffer(b"".join(items), dtype=np.uint8)
-            return flat, lens
 
-    typ = items.type
+def _arrow_flat_bytes(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(flat uint8 bytes, per-row lengths) read from an Arrow array's
+    own buffers. Integers are 8-byte little-endian ``<i8``, floats
+    ``<f8``; strings and binaries are their data bytes, located through
+    the offsets buffer, so rows stay end to end with no per-row Python.
+    A NULL slot yields whatever its buffers hold; callers that must
+    exclude NULLs drop those rows' hashes."""
+    typ = arr.type
     if pa.types.is_integer(typ) or pa.types.is_floating(typ):
-        # canonical fixed-width key encoding: 8-byte little-endian
-        if items.null_count:
-            raise ValueError("null keys are not supported")
-        vals = items.to_numpy(zero_copy_only=False)
-        wide = vals.astype("<i8") if pa.types.is_integer(typ) else vals.astype("<f8")
-        flat = np.ascontiguousarray(wide).view(np.uint8)
-        lens = np.full(len(items), 8, dtype=np.int64)
-        return flat, lens
+        vals = (arr.fill_null(0) if arr.null_count else arr).to_numpy(
+            zero_copy_only=False)
+        wide = vals.astype("<i8" if pa.types.is_integer(typ) else "<f8",
+                           copy=False)
+        return (np.ascontiguousarray(wide).view(np.uint8),
+                np.full(len(arr), 8, dtype=np.int64))
     if pa.types.is_string(typ) or pa.types.is_binary(typ):
         odt = np.int32
     elif pa.types.is_large_string(typ) or pa.types.is_large_binary(typ):
         odt = np.int64
     else:
-        items = items.cast(pa.large_binary())
+        arr = arr.cast(pa.large_binary())
         odt = np.int64
-    bufs = items.buffers()
-    off0 = items.offset
-    offsets = np.frombuffer(bufs[1], dtype=odt, count=len(items) + 1 + off0)[off0:]
+    bufs = arr.buffers()
+    off0 = arr.offset
+    offsets = np.frombuffer(bufs[1], dtype=odt, count=len(arr) + 1 + off0)[off0:]
     data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.zeros(0, np.uint8)
     lens = (offsets[1:] - offsets[:-1]).astype(np.int64)
-    start = int(offsets[0])
-    end = int(offsets[-1])
-    flat = data[start:end]
-    return np.ascontiguousarray(flat), lens
+    return data[int(offsets[0]):int(offsets[-1])], lens
 
 
-def _pad_rows(flat: np.ndarray, lens: np.ndarray, pad: int = 8) -> np.ndarray:
-    """Ragged → dense 2D uint8 [n, maxlen+pad] (zero padded, 8-byte aligned).
+def to_flat_bytes(items) -> tuple[np.ndarray, np.ndarray]:
+    """Normalize a batch of keys to (flat uint8 array, per-row lengths).
 
-    Copy strategy: one fancy gather per distinct LENGTH CLASS (url-ish
-    workloads have a handful) — measured ~2× faster than the boolean-
-    mask assignment, which the many-classes case falls back to."""
-    n = len(lens)
-    maxlen = int(lens.max()) if n else 0
-    width = maxlen + pad
-    width += (-width) % 8  # keep row width a multiple of 8 for u64 views
-    buf = np.zeros((n, width), dtype=np.uint8)
-    if not maxlen:
-        return buf
-    uls = np.unique(lens)
-    if len(uls) <= 64:
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        for L in uls:
-            if L == 0:
-                continue
-            rr = np.nonzero(lens == L)[0]
-            src = starts[rr][:, None] + np.arange(int(L))
-            buf[rr, :int(L)] = flat[src]
-    else:
-        mask = np.arange(maxlen) < lens[:, None]
-        buf[:, :maxlen][mask] = flat
-    return buf
-
-
-def _read_u64_at(u64buf: np.ndarray, rows: np.ndarray, off: np.ndarray,
-                 nbytes: int) -> np.ndarray:
-    """Little-endian read of `nbytes` bytes at per-row byte offsets via
-    TWO aligned u64 lane loads + shift-combine (the row pad guarantees
-    lane+1 exists) — ~4× fewer gathered elements than a per-byte gather
-    for 8-byte reads."""
-    lane = (off >> 3).astype(np.int64)
-    sh = ((off.astype(np.uint64) & _U64(7)) * _U64(8))
-    lo = u64buf[rows, lane]
-    hi = u64buf[rows, lane + 1]
-    w = (lo >> sh) | np.where(sh == 0, _U64(0),
-                              hi << ((_U64(64) - sh) & _U64(63)))
-    if nbytes < 8:
-        w = w & _U64((1 << (8 * nbytes)) - 1)
-    return w
+    Accepts: pandas Series of str/bytes, pyarrow String/Binary arrays,
+    list/ndarray of bytes. Uses Arrow buffers so the hot path does not
+    touch per-row Python objects."""
+    try:
+        arr = _as_arrow(items)
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        # fall back: list of bytes objects
+        lens = np.fromiter((len(b) for b in items), dtype=np.int64)
+        flat = np.frombuffer(b"".join(items), dtype=np.uint8)
+        return flat, lens
+    if arr.null_count and (pa.types.is_integer(arr.type)
+                           or pa.types.is_floating(arr.type)):
+        raise ValueError("null keys are not supported")
+    return _arrow_flat_bytes(arr)
 
 
 def metro64_batch(items, seed: int = DEFAULT_SEED) -> np.ndarray:
@@ -227,6 +207,26 @@ def fmix64(x: np.ndarray, seed=0) -> np.ndarray:
     z = (z ^ (z >> np.uint64(33))) * np.uint64(0xFF51AFD7ED558CCD)
     z = (z ^ (z >> np.uint64(29))) * np.uint64(0xC4CEB9FE1A85EC53)
     return z ^ (z >> np.uint64(32))
+
+
+def _integral_int64(v: np.ndarray) -> np.ndarray:
+    """float64 key values → int64, or raise — the float-key rules of
+    :func:`canon_int_keys`, shared with :func:`metro64_keys`."""
+    if not (np.isfinite(v).all() and (v == np.floor(v)).all()):
+        raise TypeError(
+            "canon_int_keys: non-integral float key batch — float "
+            "keys are not supported as membership keys (their hash "
+            "identity would depend on batch composition); cast to a "
+            "stable string/integral form first")
+    if (np.abs(v) > 2.0 ** 53).any():
+        raise ValueError(
+            "canon_int_keys: integral key batch beyond float64's "
+            "exact-integer range (|key| > 2^53) arrived as float64 "
+            "(Arrow renders null-bearing bigint batches as float64) "
+            "— the original values are already lost, so restoring "
+            "int64 would silently mis-hash; CAST the key to STRING "
+            "or drop NULLs JVM-side so batches stay int64")
+    return v.astype(np.int64)
 
 
 def canon_int_keys(vals):
@@ -255,38 +255,41 @@ def canon_int_keys(vals):
       exclude NULLs JVM-side so batches stay int64 end-to-end."""
     if getattr(vals, "dtype", None) is not None and vals.dtype.kind == "f" \
             and len(vals):
-        v = vals.to_numpy()
-        if not (np.isfinite(v).all() and (v == np.floor(v)).all()):
-            raise TypeError(
-                "canon_int_keys: non-integral float key batch — float "
-                "keys are not supported as membership keys (their hash "
-                "identity would depend on batch composition); cast to a "
-                "stable string/integral form first")
-        if (np.abs(v) > 2.0 ** 53).any():
-            raise ValueError(
-                "canon_int_keys: integral key batch beyond float64's "
-                "exact-integer range (|key| > 2^53) arrived as float64 "
-                "(Arrow renders null-bearing bigint batches as float64) "
-                "— the original values are already lost, so restoring "
-                "int64 would silently mis-hash; CAST the key to STRING "
-                "or drop NULLs JVM-side so batches stay int64")
+        _integral_int64(vals.to_numpy())
         return vals.astype("int64")
     return vals
 
 
-def key_mask_and_values(items):
-    """(canonicalized non-null values, notna bool ndarray) for a batch of
-    membership keys — THE pre-hash cleaning every key-hashing entry point
-    shares: NULL keys are excluded (a NULL string slot has zero Arrow
-    length and would alias with ``''``; a NULL numeric slot crashes
-    ``to_flat_bytes``), and integral identity is restored via
-    :func:`canon_int_keys`."""
-    import pandas as pd
+def metro64_keys(items, seed: int = DEFAULT_SEED) -> tuple[np.ndarray, np.ndarray]:
+    """(metro64 of the non-NULL keys in row order, validity bool[n]) —
+    THE key cleaning every membership build, probe, shard router and
+    delete shares, read straight from the batch's Arrow buffers:
 
-    vals = items if isinstance(items, pd.Series) else pd.Series(items)
-    notna = vals.notna().to_numpy()
-    nn = vals if notna.all() else vals[notna]
-    return canon_int_keys(nn), notna
+    * NULL keys are dropped through the validity bitmap (a NULL string
+      slot would otherwise alias ``''``); float NaN counts as NULL, as
+      it does in pandas;
+    * strings and binaries hash their bytes (offsets + data buffers);
+    * integers of any width hash as 8-byte ``<i8``;
+    * floats follow :func:`canon_int_keys`: integral values hash as the
+      int64 they render (a bigint column's NULL-bearing batches reach
+      pandas as float64), non-integral values or values beyond 2^53
+      raise.
+
+    Accepts ``pa.Array``/``pa.ChunkedArray`` (Arrow UDFs and
+    ``mapInArrow``) and pandas Series (converted to Arrow, so both
+    paths share this one definition)."""
+    arr = _as_arrow(items)
+    valid = (np.ones(len(arr), dtype=bool) if arr.null_count == 0
+             else arr.is_valid().to_numpy(zero_copy_only=False))
+    if pa.types.is_floating(arr.type):
+        v = arr.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        valid &= ~np.isnan(v)
+        wide = _integral_int64(v[valid])
+        return (metro64_flat(wide.view(np.uint8),
+                             np.full(len(wide), 8, dtype=np.int64), seed),
+                valid)
+    h = metro64_flat(*_arrow_flat_bytes(arr), seed)
+    return (h if len(h) == int(valid.sum()) else h[valid]), valid
 
 
 # --- xxHash64 of a single 64-bit word ---------------------------------------
@@ -327,176 +330,115 @@ def xxh64_long_batch(h: np.ndarray, seed: int = SPARK_XXHASH64_SEED) -> np.ndarr
     return out
 
 
-# Cap on the dense [n, maxlen] pad buffer _metro64_flat_masked
-# allocates: one long outlier row in a large Arrow batch would
-# otherwise inflate it to n·maxlen bytes (10k docs + one 1 MB doc =
-# ~10 GB of zeros) regardless of actual data size. 1 GiB keeps every
-# url-scale workload (8M × ~72 B ≈ 0.6 GB) on the single-pass fast
-# path; only outlier-heavy batches pay the sort+chunk detour.
-_PAD_BUDGET = 1 << 30
-
-
-def _gather_rows(flat: np.ndarray, starts: np.ndarray, lens: np.ndarray,
-                 idx: np.ndarray) -> np.ndarray:
-    """Concatenate the byte ranges of the selected rows (vectorized)."""
-    L = lens[idx]
-    total = int(L.sum())
-    if total == 0:
-        return np.zeros(0, dtype=np.uint8)
-    rep_starts = np.repeat(starts[idx], L)
-    csum = np.cumsum(L)
-    offs = np.arange(total, dtype=np.int64) - np.repeat(csum - L, L)
-    return flat[rep_starts + offs]
+# Rows still in the block loop at or below which the remaining blocks
+# run as Python ints (one numpy round costs about ten scalar blocks).
+_SCALAR_ROWS = 8
 
 
 def metro64_flat(flat: np.ndarray, lens: np.ndarray, seed: int = DEFAULT_SEED) -> np.ndarray:
-    """Masked variable-length kernel. (A length-grouped variant with
-    per-group fixed-length slicing was benchmarked and lost: the per-
-    group row gather costs more than the masked tail phases when length
-    classes are few, which is the url-workload case.)
+    """MetroHash64 of each row of a flat byte run (row i is the next
+    ``lens[i]`` bytes) → uint64[n].
 
-    When the dense pad buffer would exceed _PAD_BUDGET (long-document
-    outliers), rows are sorted by length and hashed in chunks whose
-    individual pad area stays under the budget — bit-identical output
-    (the hash is per-row), bounded memory."""
+    Every word is read in place: ONE copy of ``flat`` with a zero tail
+    is viewed as overlapping little-endian u64 words at a 1-byte stride,
+    so the word at any byte offset is a single gather (no per-row pad
+    buffer; memory is O(total key bytes) whatever the longest key).
+    Words that run past a row's end are masked to the bytes the tail
+    branch reads."""
     n = len(lens)
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
-    maxlen = int(lens.max())
-    width = maxlen + 8
-    width += (-width) % 8
-    if n * width <= _PAD_BUDGET:
-        return _metro64_flat_masked(flat, lens, seed)
-    starts = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    order = np.argsort(lens, kind="stable")
-    slens = lens[order]
-    out = np.empty(n, dtype=np.uint64)
-    i = 0
-    while i < n:
-        # largest j with (j-i)·(pad width of longest row in chunk) ≤
-        # budget; lens sorted, so the area is monotone in j → bsearch.
-        # A single row over budget by itself runs alone (its pad buffer
-        # is ~the row's own size; no smaller unit exists).
-        lo, hi = i + 1, n
-        while lo < hi:
-            mid = (lo + hi + 1) // 2
-            if (mid - i) * (int(slens[mid - 1]) + 16) <= _PAD_BUDGET:
-                lo = mid
-            else:
-                hi = mid - 1
-        idx = order[i:lo]
-        out[idx] = _metro64_flat_masked(
-            _gather_rows(flat, starts, lens, idx), lens[idx], seed)
-        i = lo
-    return out
-
-
-def _metro64_flat_masked(flat: np.ndarray, lens: np.ndarray, seed: int = DEFAULT_SEED) -> np.ndarray:
-    n = len(lens)
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    buf = _pad_rows(flat, lens)
-    u64buf = buf.view(np.uint64)  # [n, width//8] aligned lanes
+    lens = np.asarray(lens, dtype=np.int64)
+    starts = np.zeros(n, dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    total = int(starts[-1] + lens[-1])
+    buf = np.zeros(total + 8, dtype=np.uint8)  # the zero tail keeps every
+    buf[:total] = np.asarray(flat).reshape(-1)[:total]  # read in bounds
+    words = np.ndarray((total + 1,), dtype="<u8", buffer=buf, strides=(1,))
 
     h = np.full(n, (((seed + _K2) * _K0) & _MASK64), dtype=np.uint64)
-    remaining = lens.copy()
-    off = np.zeros(n, dtype=np.int64)
 
     # --- 32-byte block loop, batched across rows that still have blocks ---
-    has_blocks = lens >= 32
-    if has_blocks.any():
-        rows = np.nonzero(has_blocks)[0]
-        nblocks = (lens[rows] // 32).astype(np.int64)
+    rows = np.flatnonzero(lens >= 32)
+    if len(rows):
+        nblocks = lens[rows] >> 5
         maxb = int(nblocks.max())
+        hr = h[rows]
         if maxb == 1:
             # url-length fast path: every block row has exactly one block
-            # → no (4, n) state array, no per-round gather/scatter
-            hr = h[rows]
-            v0 = _rotr_np(hr + u64buf[rows, 0] * _NK0, 29) + hr
-            v1 = _rotr_np(hr + u64buf[rows, 1] * _NK1, 29) + hr
-            v2 = _rotr_np(hr + u64buf[rows, 2] * _NK2, 29) + v0
-            v3 = _rotr_np(hr + u64buf[rows, 3] * _NK3, 29) + v1
+            o = starts[rows]
+            v0 = _rotr_np(hr + words[o] * _NK0, 29) + hr
+            v1 = _rotr_np(hr + words[o + 8] * _NK1, 29) + hr
+            v2 = _rotr_np(hr + words[o + 16] * _NK2, 29) + v0
+            v3 = _rotr_np(hr + words[o + 24] * _NK3, 29) + v1
         else:
-            v = np.repeat(h[None, :], 4, axis=0).copy()  # v0..v3
-            for blk in range(maxb):
-                act = nblocks > blk
-                r = rows[act]
-                lane0 = (blk * 32) // 8
-                w0 = u64buf[r, lane0]
-                w1 = u64buf[r, lane0 + 1]
-                w2 = u64buf[r, lane0 + 2]
-                w3 = u64buf[r, lane0 + 3]
-                b0 = v[0, r] + w0 * _NK0
-                b0 = _rotr_np(b0, 29) + v[2, r]
-                b1 = v[1, r] + w1 * _NK1
-                b1 = _rotr_np(b1, 29) + v[3, r]
-                b2 = v[2, r] + w2 * _NK2
-                b2 = _rotr_np(b2, 29) + b0
-                b3 = v[3, r] + w3 * _NK3
-                b3 = _rotr_np(b3, 29) + b1
-                v[0, r] = b0
-                v[1, r] = b1
-                v[2, r] = b2
-                v[3, r] = b3
-            v0, v1, v2, v3 = v[0, rows], v[1, rows], v[2, rows], v[3, rows]
+            # rows in descending block count: the rows still active in
+            # round k are a prefix, updated in place through slices
+            order = np.argsort(-nblocks, kind="stable")
+            rows, nblocks, hr = rows[order], nblocks[order], hr[order]
+            active = np.searchsorted(-nblocks, -np.arange(maxb), side="left")
+            base = starts[rows]
+            v0, v1, v2, v3 = hr.copy(), hr.copy(), hr.copy(), hr.copy()
+            for k in range(maxb):
+                a = int(active[k])
+                if a <= _SCALAR_ROWS:
+                    # a few long rows left: a numpy round costs more than
+                    # their remaining blocks in Python ints
+                    for j in range(a):
+                        o, end = int(base[j]) + 32 * k, int(base[j] + 32 * nblocks[j])
+                        v0[j], v1[j], v2[j], v3[j] = _block_rounds(
+                            memoryview(buf)[o:end], int(v0[j]), int(v1[j]),
+                            int(v2[j]), int(v3[j]))
+                    break
+                o = base[:a] + 32 * k
+                x0, x1, x2, x3 = v0[:a], v1[:a], v2[:a], v3[:a]
+                x0[:] = _rotr_np(x0 + words[o] * _NK0, 29) + x2
+                x1[:] = _rotr_np(x1 + words[o + 8] * _NK1, 29) + x3
+                x2[:] = _rotr_np(x2 + words[o + 16] * _NK2, 29) + x0
+                x3[:] = _rotr_np(x3 + words[o + 24] * _NK3, 29) + x1
         v2 = v2 ^ (_rotr_np((v0 + v3) * _NK0 + v1, 37) * _NK1)
         v3 = v3 ^ (_rotr_np((v1 + v2) * _NK1 + v0, 37) * _NK0)
         v0 = v0 ^ (_rotr_np((v0 + v2) * _NK0 + v3, 37) * _NK1)
         v1 = v1 ^ (_rotr_np((v1 + v3) * _NK1 + v2, 37) * _NK0)
-        h[rows] = h[rows] + (v0 ^ v1)
-        off[rows] = nblocks * 32
-        remaining[rows] = lens[rows] - off[rows]
+        h[rows] = hr + (v0 ^ v1)
 
-    # --- 16-byte tail ---
-    m = remaining >= 16
-    if m.any():
-        r = np.nonzero(m)[0]
-        w0 = _read_u64_at(u64buf, r, off[r], 8)
-        w1 = _read_u64_at(u64buf, r, off[r] + 8, 8)
-        v0 = h[r] + w0 * _NK2
-        v0 = _rotr_np(v0, 29) * _NK3
-        v1 = h[r] + w1 * _NK2
-        v1 = _rotr_np(v1, 29) * _NK3
+    # --- tails: rem = len % 32 bytes after the blocks; each branch
+    # applies to the rows whose rem has that bit ---
+    rem = lens & 31
+    off = starts + (lens - rem)
+
+    r = np.flatnonzero(rem & 16)
+    if len(r):
+        o = off[r]
+        v0 = _rotr_np(h[r] + words[o] * _NK2, 29) * _NK3
+        v1 = _rotr_np(h[r] + words[o + 8] * _NK2, 29) * _NK3
         v0 = v0 ^ (_rotr_np(v0 * _NK0, 21) + v1)
         v1 = v1 ^ (_rotr_np(v1 * _NK3, 21) + v0)
         h[r] = h[r] + v1
         off[r] += 16
-        remaining[r] -= 16
 
-    # --- 8-byte tail ---
-    m = remaining >= 8
-    if m.any():
-        r = np.nonzero(m)[0]
-        h[r] = h[r] + _read_u64_at(u64buf, r, off[r], 8) * _NK3
+    r = np.flatnonzero(rem & 8)
+    if len(r):
+        x = h[r] + words[off[r]] * _NK3
+        h[r] = x ^ (_rotr_np(x, 55) * _NK1)
         off[r] += 8
-        remaining[r] -= 8
-        h[r] = h[r] ^ (_rotr_np(h[r], 55) * _NK1)
 
-    # --- 4-byte tail ---
-    m = remaining >= 4
-    if m.any():
-        r = np.nonzero(m)[0]
-        h[r] = h[r] + _read_u64_at(u64buf, r, off[r], 4) * _NK3
-        h[r] = h[r] ^ (_rotr_np(h[r], 26) * _NK1)
+    r = np.flatnonzero(rem & 4)
+    if len(r):
+        x = h[r] + (words[off[r]] & _U64(0xFFFFFFFF)) * _NK3
+        h[r] = x ^ (_rotr_np(x, 26) * _NK1)
         off[r] += 4
-        remaining[r] -= 4
 
-    # --- 2-byte tail ---
-    m = remaining >= 2
-    if m.any():
-        r = np.nonzero(m)[0]
-        h[r] = h[r] + _read_u64_at(u64buf, r, off[r], 2) * _NK3
+    r = np.flatnonzero(rem & 2)
+    if len(r):
+        x = h[r] + (words[off[r]] & _U64(0xFFFF)) * _NK3
+        h[r] = x ^ (_rotr_np(x, 48) * _NK1)
         off[r] += 2
-        remaining[r] -= 2
-        h[r] = h[r] ^ (_rotr_np(h[r], 48) * _NK1)
 
-    # --- 1-byte tail ---
-    m = remaining >= 1
-    if m.any():
-        r = np.nonzero(m)[0]
-        h[r] = h[r] + buf[r, off[r]].astype(np.uint64) * _NK3
-        h[r] = h[r] ^ (_rotr_np(h[r], 37) * _NK1)
+    r = np.flatnonzero(rem & 1)
+    if len(r):
+        x = h[r] + (words[off[r]] & _U64(0xFF)) * _NK3
+        h[r] = x ^ (_rotr_np(x, 37) * _NK1)
 
     h = h ^ _rotr_np(h, 28)
     h = h * _NK0

@@ -31,7 +31,7 @@ import struct
 
 import numpy as np
 
-from cuckoo_filter_spark.hashing import key_mask_and_values, metro64_batch
+from cuckoo_filter_spark.hashing import metro64_batch, metro64_keys
 from cuckoo_filter_spark.kernel import bitpack
 from cuckoo_filter_spark.params import (
     MAX_CUCKOO_KICKS,
@@ -132,7 +132,7 @@ class CuckooKernel:
     def fingerprints(self, items) -> tuple[np.ndarray, np.ndarray]:
         """Batch of keys → (index, tag) arrays. RAW mapping (no null
         handling — parity tests feed it clean inputs); the item-level
-        entry points below run keys through key_mask_and_values first
+        entry points below hash keys through metro64_keys instead
         (NULL exclusion + integral-dtype restore)."""
         h = metro64_batch(items)
         return self.params.split(h)
@@ -143,11 +143,10 @@ class CuckooKernel:
         non-null keys are dtype-canonicalized so a bigint column's
         null-bearing float64 batches hash identically to its int64
         batches (exact-join false-negative hazard otherwise)."""
-        nn, notna = key_mask_and_values(items)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            idx, tag = self.fingerprints(nn)
-            out[notna] = hashed_op(idx, tag)
+        h, valid = metro64_keys(items)
+        out = np.zeros(len(valid), dtype=bool)
+        if len(h):
+            out[valid] = hashed_op(*self.params.split(h))
         return out
 
     def _check_usable(self) -> None:
@@ -860,9 +859,8 @@ class CuckooProbe:
     def contain(self, items) -> np.ndarray:
         # same NULL/dtype key cleaning as CuckooKernel.contain: NULL
         # probes answer False, bigint float64-rendered batches restored
-        nn, notna = key_mask_and_values(items)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            idx, tag = self.params.split(metro64_batch(nn))
-            out[notna] = self.contain_hashed(idx, tag)
+        h, valid = metro64_keys(items)
+        out = np.zeros(len(valid), dtype=bool)
+        if len(h):
+            out[valid] = self.contain_hashed(*self.params.split(h))
         return out

@@ -40,7 +40,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import metro64_keys
 from cuckoo_filter_spark.kernel.filter import CuckooKernel
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
@@ -265,19 +265,17 @@ def canon_dedupe_pairs(params: CuckooParams, bi: np.ndarray,
     return bi[first], tags[first]
 
 
-def hashes_of(pdf_col, hash_fn: str) -> np.ndarray:
-    """Column batch → uint64 hashes. 'metro64' hashes key bytes in numpy
-    (reference parity); '__prehashed__' means the column already holds
-    a JVM-computed 64-bit hash (e.g. F.xxhash64 — whole-stage codegen,
-    no Python hashing cost). Callers must have EXCLUDED null keys;
-    integral identity is restored here (a bigint column's null-bearing
-    batches reach pandas as float64 — hashing those bytes would split
-    fingerprint identity from the int64 batches)."""
-    from cuckoo_filter_spark.hashing import canon_int_keys
-
+def key_hashes(col, hash_fn: str) -> tuple[np.ndarray, np.ndarray]:
+    """Key batch (Arrow array or pandas Series) → (uint64 hashes of its
+    non-NULL keys, validity mask). 'metro64' is :func:`metro64_keys`
+    (reference parity; NULLs dropped, integral identity restored);
+    '__prehashed__' means the column already holds a JVM-computed
+    64-bit hash (e.g. F.xxhash64 — whole-stage codegen, no Python
+    hashing cost) with NULL keys dropped JVM-side."""
     if hash_fn == "__prehashed__":
-        return pdf_col.to_numpy(dtype="int64").view(np.uint64)
-    return metro64_batch(canon_int_keys(pdf_col))
+        h = np.asarray(col).astype(np.int64, copy=False).view(np.uint64)
+        return h, np.ones(len(h), dtype=bool)
+    return metro64_keys(col)
 
 
 def _sparse_partial_builder(params: CuckooParams, key_col: str, unique: bool,
@@ -311,7 +309,7 @@ def _sparse_partial_builder(params: CuckooParams, key_col: str, unique: bool,
             rows += len(keys)
             if seen is not None:
                 seen.add(keys)
-            idx, tag = params.split(hashes_of(keys, hash_fn))
+            idx, tag = params.split(key_hashes(keys, hash_fn)[0])
             bis.append(idx)
             tgs.append(tag)
         bi = np.concatenate(bis) if bis else np.zeros(0, dtype=np.int64)
@@ -363,7 +361,7 @@ def _hash_partial_builder(key_col: str, unique: bool, hash_fn: str = "metro64",
             rows += len(keys)
             if seen is not None:
                 seen.add(keys)
-            hs.append(hashes_of(keys, hash_fn))
+            hs.append(key_hashes(keys, hash_fn)[0])
         h = np.concatenate(hs) if hs else np.zeros(0, dtype=np.uint64)
         if unique and len(h):
             h = np.unique(h)  # same-key copies share a hash; canon-space
@@ -498,8 +496,7 @@ def _sharded_from_hash_partials(parts, est_keys: int, num_shards: int,
 
     pairs = parts.select("partition_id", "rows", "blob").mapInPandas(
         explode, sh.PAIRS_SCHEMA)
-    shards_df = pairs.groupBy("shard").applyInPandas(
-        sh._shard_combiner(params, unique), sh.SHARD_SCHEMA)
+    shards_df = sh.combine_shards(pairs, params, unique, num_shards)
     if output_path is not None:
         # executors write the blobs; only metrics rows reach the driver
         shards_df.write.mode("overwrite").parquet(output_path)

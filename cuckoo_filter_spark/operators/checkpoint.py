@@ -24,11 +24,10 @@ import numpy as np
 from cuckoo_filter_spark.operators.sharded import (
     PAIRS_SCHEMA,
     SHARD_FORMAT_VERSION,
-    SHARD_SCHEMA,
     ShardedCuckooBuild,
     _pair_emitter,
-    _shard_combiner,
     check_shard_format,
+    combine_shards,
 )
 from cuckoo_filter_spark.params import CuckooParams
 
@@ -195,16 +194,14 @@ def build_checkpointed(
             # resume is preserved.
             sel = sel.repartition(
                 spark.sparkContext.defaultParallelism, F.col(key_col))
-        pairs = sel.mapInPandas(
+        pairs = sel.mapInArrow(
             _pair_emitter(params, key_col, num_shards, unique,
                           count_keys=count_keys), PAIRS_SCHEMA
         )
         # partition pruning of finished shards before the shuffle
         pairs = pairs.where(F.col("shard").isin([int(m) for m in missing]))
-        shards = pairs.groupBy("shard").applyInPandas(
-            _shard_combiner(params, unique), SHARD_SCHEMA
-        )
-        shards.write.mode("append").parquet(sdir)
+        combine_shards(pairs, params, unique, num_shards).write.mode(
+            "append").parquet(sdir)
 
     sdf = spark.read.parquet(sdir)
     check_shard_format(sdf, "build_sharded_with_checkpoint")

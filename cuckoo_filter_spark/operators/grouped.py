@@ -37,7 +37,7 @@ from cuckoo_filter_spark.kernel.filter import CuckooKernel, CuckooProbe
 from cuckoo_filter_spark.operators.build import (
     DEFAULT_HEADROOM,
     DistinctAccum,
-    hashes_of,
+    key_hashes,
 )
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
@@ -80,7 +80,7 @@ def _partial_emitter(group_col: str, key_col: str, with_hashes: bool,
             ns.append(len(sub))
             if with_hashes:
                 keys = sub[key_col].reset_index(drop=True)
-                blobs.append(hashes_of(keys, hash_fn).astype("<u8").tobytes())
+                blobs.append(key_hashes(keys, hash_fn)[0].astype("<u8").tobytes())
         if gacc is not None:
             gdf = gacc.consolidated()
             seen = (gdf[group_col] if len(gdf)

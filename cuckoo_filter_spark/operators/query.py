@@ -1,9 +1,10 @@
 """Membership queries over built filters (SURVEY.md §2.2, §3 query path).
 
 ``might_contain`` is the Contain predicate (cuckoofilter.go:178-188) as a
-vectorized pandas UDF over a broadcast blob: hashing + bucket probes are
-numpy batch ops; the decoded (unpacked) table is cached per executor
-process so each task pays decode cost at most once per blob.
+vectorized Arrow UDF over a broadcast blob: keys hash straight from the
+batch's Arrow buffers and bucket probes are numpy batch ops; the decoded
+(unpacked) table is cached per executor process so each task pays
+decode cost at most once per blob.
 
 Join patterns (no false negatives ⇒ safe pruning):
 
@@ -22,8 +23,11 @@ Join patterns (no false negatives ⇒ safe pruning):
 from __future__ import annotations
 
 import pandas as pd
+# pyarrow at module scope: arrow_udf resolves the postponed pa.Array
+# type hints against these globals
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from cuckoo_filter_spark.kernel.filter import CuckooProbe
 from cuckoo_filter_spark.operators.build import CuckooBuild
@@ -81,10 +85,9 @@ def might_contain_udf(spark, build: "CuckooBuild | bytes"):
 
         return might_contain
 
-    @pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
-        kern = _cached_kernel(bid, bcast)
-        return pd.Series(kern.contain(keys))
+    @arrow_udf("boolean")
+    def might_contain(keys: pa.Array) -> pa.Array:
+        return pa.array(_cached_kernel(bid, bcast).contain(keys))
 
     return might_contain
 
@@ -93,7 +96,7 @@ def register_might_contain(spark, name: str, build: "CuckooBuild | bytes") -> No
     """Register the membership predicate as a SQL function, so pure-SQL
     pipelines can use it: ``SELECT * FROM t WHERE <name>(url)``.
     Accepts a ShardedCuckooBuild (what build_cuckoo_filter returns past
-    its auto-shard threshold) — its metro64 probe is itself a pandas
+    its auto-shard threshold) — its metro64 probe is itself an Arrow
     UDF and registers the same way."""
     from cuckoo_filter_spark.operators.sharded import (
         ShardedCuckooBuild,
@@ -107,7 +110,7 @@ def register_might_contain(spark, name: str, build: "CuckooBuild | bytes") -> No
     if isinstance(build, ShardedCuckooBuild):
         spark.udf.register(name, sharded_might_contain_udf(spark, build))
         return
-    # the metro64 branch of might_contain_udf IS the registerable pandas
+    # the metro64 branch of might_contain_udf IS the registerable Arrow
     # UDF (one definition of the probe + executor cache logic)
     spark.udf.register(name, might_contain_udf(spark, build))
 

@@ -11,11 +11,12 @@ sharded build keeps everything distributed:
   uniform at ANY shard count × table size (top-of-the-same-word shard
   bits would collide with index bits once log2(S)+log2(nb) > 32 and
   strand most buckets — ADVICE r3).
-* build: mapInPandas fingerprints each scan partition and emits one
-  packed (bucket, tag) pair blob per (partition, shard); a single
-  shuffle groups pair blobs by shard; applyInPandas runs the kick-loop
-  combine per shard in parallel → one filter blob row per shard.
-  Shuffle volume is 8 bytes/key regardless of table size.
+* build: mapInArrow fingerprints each scan partition straight from its
+  Arrow key buffers and emits one packed (bucket, tag) pair blob per
+  (partition, shard); a single shuffle places pair blobs by shard id
+  (``combine_shards``), and each combine task runs the kick loop for
+  its shards one at a time → one filter blob row per shard. Shuffle
+  volume is 8 bytes/key regardless of table size.
 * query: with a modest shard count the blobs are collected + broadcast
   and probes route by shard inside the UDF; at full scale use
   ``sharded_might_contain_join`` which co-partitions the probe side with
@@ -35,9 +36,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+# pyarrow at module scope: arrow_udf resolves the postponed pa.Array
+# type hints against these globals
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import metro64_keys
 from cuckoo_filter_spark.kernel.filter import CuckooKernel, CuckooProbe
 from cuckoo_filter_spark.operators.build import (
     DEFAULT_HEADROOM,
@@ -47,8 +52,13 @@ from cuckoo_filter_spark.operators.build import (
 )
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
-PAIRS_SCHEMA = ("shard int, src_partition int, n bigint, rows bigint, "
-                "distinct_keys bigint, blob binary")
+# Pair rows (one per (partition, shard)) and filter rows (one per shard)
+# as the Arrow record batches mapInArrow exchanges; PAIRS_SCHEMA and
+# SHARD_SCHEMA are the same schemas in Spark's terms.
+_PAIRS_ARROW = pa.schema([
+    ("shard", pa.int32()), ("src_partition", pa.int32()), ("n", pa.int64()),
+    ("rows", pa.int64()), ("distinct_keys", pa.int64()), ("blob", pa.binary())])
+PAIRS_SCHEMA = from_arrow_schema(_PAIRS_ARROW)
 
 # Persisted-shard format version (ADVICE r4): bump whenever a code
 # change alters probe semantics for ALREADY-PERSISTED shard artifacts.
@@ -58,11 +68,13 @@ PAIRS_SCHEMA = ("shard int, src_partition int, n bigint, rows bigint, "
 # returning silent false negatives when probed with current code.
 SHARD_FORMAT_VERSION = 2
 
-SHARD_SCHEMA = (
-    "shard int, rows bigint, stored bigint, distinct_keys bigint, "
-    "kicks bigint, victim_used boolean, "
-    "load_factor double, wall_ms double, blob binary, format_version int"
-)
+_SHARD_ARROW = pa.schema([
+    ("shard", pa.int32()), ("rows", pa.int64()), ("stored", pa.int64()),
+    ("distinct_keys", pa.int64()), ("kicks", pa.int64()),
+    ("victim_used", pa.bool_()), ("load_factor", pa.float64()),
+    ("wall_ms", pa.float64()), ("blob", pa.binary()),
+    ("format_version", pa.int32())])
+SHARD_SCHEMA = from_arrow_schema(_SHARD_ARROW)
 
 
 def check_shard_format(shards_df, where: str) -> None:
@@ -164,13 +176,9 @@ class ShardedCuckooBuild:
         if self.hash_fn == "xxhash64":
             raise ValueError("xxhash64 build: probe via sharded_might_contain_udf "
                              "or contain_hashed64")
-        from cuckoo_filter_spark.hashing import key_mask_and_values
-
-        nn, notna = key_mask_and_values(items)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            out[notna] = _probe_sharded(
-                metro64_batch(nn), self.blobs, self.params, self.num_shards)
+        h, valid = metro64_keys(items)
+        out = np.zeros(len(valid), dtype=bool)
+        out[valid] = _probe_sharded(h, self.blobs, self.params, self.num_shards)
         return out
 
     def contain_hashed64(self, h: np.ndarray) -> np.ndarray:
@@ -210,12 +218,14 @@ def _probe_sharded(
 
 def _pair_emitter(params: CuckooParams, key_col: str, num_shards: int, unique: bool,
                   hash_fn: str = "metro64", count_keys: bool = False):
-    nb, f = params.num_buckets, params.bits_per_item
+    """mapInArrow: hash each batch's key column from its Arrow buffers,
+    route keys to shards, and emit one packed (bucket, tag) pair blob
+    per (partition, shard)."""
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        from cuckoo_filter_spark.operators.build import DistinctAccum, hashes_of
+        from cuckoo_filter_spark.operators.build import DistinctAccum, key_hashes
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         per_shard_bi: dict[int, list] = {}
@@ -227,19 +237,20 @@ def _pair_emitter(params: CuckooParams, key_col: str, num_shards: int, unique: b
         seen: DistinctAccum | None = (
             DistinctAccum(dropna=False) if count_keys else None)
         rows = 0
-        for pdf in batches:
-            # NULL keys EXCLUDED up front (library convention): aliasing
-            # with '' / numeric crash; per-shard distinct counts already
-            # excluded them downstream
-            keys = pdf[key_col].dropna()
-            if len(keys) == 0:
+        for batch in batches:
+            col = batch.column(key_col)
+            # NULL keys EXCLUDED up front (library convention) through
+            # the validity bitmap; rows counts non-null keys
+            h, valid = key_hashes(col, hash_fn)
+            if len(h) == 0:
                 continue
-            rows += len(keys)
-            h = hashes_of(keys, hash_fn)
+            rows += len(h)
             shards = shard_of(h, num_shards)
             if seen is not None:
+                keys = col if len(h) == len(col) else col.filter(pa.array(valid))
                 seen.add(pd.DataFrame(
-                    {"__shard": shards, key_col: keys.to_numpy()}))
+                    {"__shard": shards,
+                     key_col: keys.to_numpy(zero_copy_only=False)}))
             idx, tag = params.split(h)
             for s, rs in iter_shard_groups(shards):
                 per_shard_bi.setdefault(s, []).append(idx[rs])
@@ -248,59 +259,85 @@ def _pair_emitter(params: CuckooParams, key_col: str, num_shards: int, unique: b
         if seen is not None and len(seen):
             sizes = seen.consolidated().groupby("__shard", sort=False).size()
             dk_by_shard = {int(s): int(c) for s, c in sizes.items()}
-        out_shard, out_n, out_dk, out_blob = [], [], [], []
+        out = {name: [] for name in _PAIRS_ARROW.names}
         for s in sorted(per_shard_bi):
             bi = np.concatenate(per_shard_bi[s])
             tg = np.concatenate(per_shard_tg[s])
             if unique:
                 bi, tg = canon_dedupe_pairs(params, bi, tg)
-            out_shard.append(s)
-            out_n.append(len(bi))
-            out_dk.append(dk_by_shard.get(s) if count_keys else None)
-            out_blob.append(pack_pairs(bi, tg))
-        yield pd.DataFrame(
-            {"shard": out_shard, "src_partition": [pid] * len(out_shard),
-             "n": out_n, "rows": [rows] * len(out_shard),
-             "distinct_keys": pd.array(out_dk, dtype="Int64"),
-             "blob": out_blob}
-        )
+            out["shard"].append(s)
+            out["src_partition"].append(pid)
+            out["n"].append(len(bi))
+            out["rows"].append(rows)
+            out["distinct_keys"].append(dk_by_shard.get(s) if count_keys else None)
+            out["blob"].append(pack_pairs(bi, tg))
+        yield pa.RecordBatch.from_pydict(out, schema=_PAIRS_ARROW)
 
     return emit
 
 
 def _shard_combiner(params: CuckooParams, unique: bool):
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        t0 = time.perf_counter()
+    """mapInArrow over pair rows sorted by (shard, src_partition): runs
+    the kick-loop combine for one shard at a time (the sort makes each
+    shard's rows contiguous, so only that shard's pairs are held) and
+    emits one filter blob row per shard. The src_partition order makes
+    the combine order, and so the blob bytes, deterministic."""
+
+    def finish(shard: int, bis: list, tgs: list, n: int, dk, t0: float):
         kern = CuckooKernel(params, seed=0x1337C0FFEE ^ shard)
-        pdf = pdf.sort_values("src_partition")  # deterministic combine order
-        bis, tgs = [], []
-        for blob in pdf["blob"]:
-            bi, tg = unpack_pairs(bytes(blob))
-            bis.append(bi)
-            tgs.append(tg)
         bi = np.concatenate(bis) if bis else np.zeros(0, dtype=np.int64)
         tg = np.concatenate(tgs) if tgs else np.zeros(0, dtype=np.uint32)
         stored = kern.insert_pairs(bi, tg, dedupe=unique)
-        dk = pdf["distinct_keys"].sum(min_count=1)  # NaN → None when the
-        # emitter did not count raw keys (non-unique_global builds)
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "rows": [int(pdf["n"].sum())],
-                "stored": [stored],
-                "distinct_keys": pd.array(
-                    [None if pd.isna(dk) else int(dk)], dtype="Int64"),
-                "kicks": [kern.kicks],
-                "victim_used": [kern.victim_used],
-                "load_factor": [kern.load_factor()],
-                "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-                "blob": [kern.to_bytes()],
-                "format_version": [SHARD_FORMAT_VERSION],
-            }
-        )
+        wall_ms = (time.perf_counter() - t0) * 1000.0
+        return pa.RecordBatch.from_pydict(
+            {"shard": [shard], "rows": [n], "stored": [stored],
+             # None when the emitter did not count raw keys
+             # (non-unique_global builds)
+             "distinct_keys": [dk], "kicks": [kern.kicks],
+             "victim_used": [kern.victim_used],
+             "load_factor": [kern.load_factor()], "wall_ms": [wall_ms],
+             "blob": [kern.to_bytes()],
+             "format_version": [SHARD_FORMAT_VERSION]},
+            schema=_SHARD_ARROW)
+
+    def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        shard = None
+        for batch in batches:
+            blobs = batch.column("blob")
+            for i, (s, n, dk) in enumerate(zip(
+                    *(batch.column(c).to_pylist()
+                      for c in ("shard", "n", "distinct_keys")))):
+                if s != shard:
+                    if shard is not None:
+                        yield finish(shard, bis, tgs, n_pairs, dk_sum, t0)
+                    shard, bis, tgs, n_pairs, dk_sum = s, [], [], 0, None
+                    t0 = time.perf_counter()
+                bi, tg = unpack_pairs(blobs[i].as_py())
+                bis.append(bi)
+                tgs.append(tg)
+                n_pairs += n
+                if dk is not None:
+                    dk_sum = (dk_sum or 0) + dk
+        if shard is not None:
+            yield finish(shard, bis, tgs, n_pairs, dk_sum, t0)
 
     return combine
+
+
+def combine_shards(pairs: DataFrame, params: CuckooParams, unique: bool,
+                   num_shards: int) -> DataFrame:
+    """Pair rows (PAIRS_SCHEMA) → one filter row per shard (SHARD_SCHEMA).
+
+    Shard s is combined by task ``s mod P`` with P = min(num_shards,
+    defaultParallelism): placement by shard id gives every task the same
+    number of shards (within one), where hash partitioning of the ids
+    does not (32 shards on 4 tasks landed 10/10/7/5). Within a task the
+    rows are sorted by (shard, src_partition) and combined one shard at
+    a time."""
+    p = min(num_shards, pairs.sparkSession.sparkContext.defaultParallelism)
+    return (pairs.repartitionById(p, "shard")
+            .sortWithinPartitions("shard", "src_partition")
+            .mapInArrow(_shard_combiner(params, unique), SHARD_SCHEMA))
 
 
 def build_sharded_cuckoo_filter(
@@ -316,8 +353,9 @@ def build_sharded_cuckoo_filter(
     output_path: str | None = None,
     hash_fn: str = "metro64",
 ) -> ShardedCuckooBuild:
-    """Fully-distributed sharded build. One shuffle (pair blobs by
-    shard); the kick-loop combine runs per shard on executors.
+    """Fully-distributed sharded build. One shuffle (pair blobs placed
+    by shard id, ``combine_shards``); the kick-loop combine runs per
+    shard on executors.
 
     output_path: if set, shard blob rows are written to parquet by the
     executors (the 10^12 workflow — blobs never pass through the
@@ -370,11 +408,11 @@ def build_sharded_cuckoo_filter(
     if count_keys:
         n = df.sparkSession.sparkContext.defaultParallelism
         sel = sel.repartition(n, F.col(key_col))
-    pairs = sel.mapInPandas(
+    pairs = sel.mapInArrow(
         _pair_emitter(params, key_col, num_shards, unique, inner_hash,
                       count_keys=count_keys), PAIRS_SCHEMA
     )
-    shards = pairs.groupBy("shard").applyInPandas(_shard_combiner(params, unique), SHARD_SCHEMA)
+    shards = combine_shards(pairs, params, unique, num_shards)
 
     if output_path is not None:
         shards.write.mode("overwrite").parquet(output_path)
@@ -450,22 +488,8 @@ def sharded_might_contain_join(
         probe_sh = withsh.withColumn(
             "__shard", _shard_expr_jvm(F.col("__h"), num_shards))
     else:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("int")
-        def shard_udf(keys: pd.Series) -> pd.Series:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
-            # NULL keys route to shard 0 (any shard works: the probe
-            # itself answers False for them) instead of crashing the
-            # hash; integral dtype restored for null-bearing batches
-            nn, notna = key_mask_and_values(keys)
-            out = np.zeros(len(notna), dtype=np.int32)
-            if len(nn):
-                out[notna] = shard_of(metro64_batch(nn), num_shards)
-            return pd.Series(out)
-
-        probe_sh = probe.withColumn("__shard", shard_udf(F.col(key_col)))
+        probe_sh = probe.withColumn(
+            "__shard", _metro64_shard_col(F.col(key_col), num_shards))
 
     def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0:
@@ -489,14 +513,10 @@ def sharded_might_contain_join(
             idx, tag = params.split(h)
             out[flag_col] = kern.contain_hashed(idx, tag)
         else:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
             # NULL probe keys answer False; dtype-canonicalized
-            nn, notna = key_mask_and_values(left[key_col])
-            flags = np.zeros(len(notna), dtype=bool)
-            if len(nn):
-                idx, tag = params.split(metro64_batch(nn))
-                flags[notna] = kern.contain_hashed(idx, tag)
+            h, valid = metro64_keys(left[key_col])
+            flags = np.zeros(len(valid), dtype=bool)
+            flags[valid] = kern.contain_hashed(*params.split(h))
             out[flag_col] = flags
         return out
 
@@ -563,23 +583,8 @@ def sharded_delete(
         keyed = keys_df.select(F.xxhash64(F.col(key_col)).alias("__h"))
         keyed = keyed.withColumn("__shard", _shard_expr_jvm(F.col("__h"), num_shards))
     else:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("int")
-        def shard_udf(keys: pd.Series) -> pd.Series:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
-            # NULL keys route to shard 0 (any shard works: the probe
-            # itself answers False for them) instead of crashing the
-            # hash; integral dtype restored for null-bearing batches
-            nn, notna = key_mask_and_values(keys)
-            out = np.zeros(len(notna), dtype=np.int32)
-            if len(nn):
-                out[notna] = shard_of(metro64_batch(nn), num_shards)
-            return pd.Series(out)
-
         keyed = keys_df.select(F.col(key_col)).withColumn(
-            "__shard", shard_udf(F.col(key_col)))
+            "__shard", _metro64_shard_col(F.col(key_col), num_shards))
 
     def delete_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(right) == 0:
@@ -608,12 +613,9 @@ def sharded_delete(
         if hash_fn == "xxhash64":
             h = left["__h"].to_numpy(dtype="int64").view(np.uint64)
         else:
-            from cuckoo_filter_spark.hashing import key_mask_and_values
-
             # NULL delete requests are no-ops (nothing is stored under
             # NULL) — and must not crash/alias the hash
-            nn, _ = key_mask_and_values(left[key_col])
-            h = metro64_batch(nn) if len(nn) else np.zeros(0, dtype=np.uint64)
+            h, _ = metro64_keys(left[key_col])
         idx, tag = params.split(h)
         ok = kern.delete_hashed(idx, tag)
         return pd.DataFrame(
@@ -662,7 +664,7 @@ def sharded_might_contain_udf(spark, build: ShardedCuckooBuild):
     bid = bcast._jbroadcast.id()
     params = build.params
     num_shards = build.num_shards
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf, pandas_udf
 
     if build.hash_fn == "xxhash64":
 
@@ -679,17 +681,29 @@ def sharded_might_contain_udf(spark, build: ShardedCuckooBuild):
 
         return might_contain
 
-    @pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
-        from cuckoo_filter_spark.hashing import key_mask_and_values
-
+    @arrow_udf("boolean")
+    def might_contain(keys: pa.Array) -> pa.Array:
         # NULL probe keys answer False; dtype-canonicalized
-        nn, notna = key_mask_and_values(keys)
-        out = np.zeros(len(notna), dtype=bool)
-        if len(nn):
-            out[notna] = _probe_sharded(
-                metro64_batch(nn), bcast.value, params, num_shards,
-                cache_key=bid)
-        return pd.Series(out)
+        h, valid = metro64_keys(keys)
+        out = np.zeros(len(valid), dtype=bool)
+        out[valid] = _probe_sharded(h, bcast.value, params, num_shards,
+                                    cache_key=bid)
+        return pa.array(out)
 
     return might_contain
+
+
+def _metro64_shard_col(col, num_shards: int):
+    """Shard id of a metro64 key column, hashed from its Arrow buffers.
+    NULL keys route to shard 0 — any shard works: probes answer False
+    for them and deletes of them are no-ops."""
+    from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf("int")
+    def shard_udf(keys: pa.Array) -> pa.Array:
+        h, valid = metro64_keys(keys)
+        out = np.zeros(len(valid), dtype=np.int32)
+        out[valid] = shard_of(h, num_shards)
+        return pa.array(out)
+
+    return shard_udf(col)

@@ -86,15 +86,21 @@ def collect_and_merge(parts_df, makes, n_partitions: int,
                       tree_merge_at: int = TREE_MERGE_AT):
     """Collect a partial-blob frame and merge per sketch_id.
 
-    Returns (merged sketches in sketch_id order, collected rows).
-    Below ``tree_merge_at`` source partitions: direct collect + driver
-    reduce (the classic path, plan-identical to pre-r7). Above: one
-    ``tree_merge_level`` of ceil(sqrt(P)) groups runs on executors and
-    the driver reduces the O(sqrt(P)) group rows."""
+    Returns (merged sketches in sketch_id order, collected rows as
+    dicts). Below ``tree_merge_at`` source partitions: direct collect +
+    driver reduce (the classic path, plan-identical to pre-r7). Above:
+    one ``tree_merge_level`` of ceil(sqrt(P)) groups runs on executors
+    and the driver reduces the O(sqrt(P)) group rows.
+
+    Every row carries ``merged_groups``: 0 when it is one source
+    partition's partial, else the number of merge groups — the row is
+    then a group (``partition_id`` = group id, ``rows`` summed,
+    ``wall_ms`` the group max)."""
+    groups = 0
     if n_partitions > tree_merge_at:
-        parts_df = tree_merge_level(
-            parts_df, makes, int(math.ceil(math.sqrt(n_partitions))))
-    rows = parts_df.collect()
+        groups = int(math.ceil(math.sqrt(n_partitions)))
+        parts_df = tree_merge_level(parts_df, makes, groups)
+    rows = [dict(r.asDict(), merged_groups=groups) for r in parts_df.collect()]
     merged = []
     for sid, make in enumerate(makes):
         proto = make()
@@ -114,7 +120,8 @@ def build_sketch(df, col: str, make_sketch: Callable[[], object],
     Returns (sketch, metrics list). Above ``tree_merge_at`` source
     partitions the combine runs one executor-side tree level first
     (module docstring) and metrics carry one row per MERGE GROUP
-    (partition_id = group id, rows summed) instead of per partition.
+    (partition_id = group id, rows summed, ``merged_groups`` > 0)
+    instead of per partition (``merged_groups`` = 0).
     """
     schema = ("partition_id int, sketch_id int, rows bigint, "
               "wall_ms double, blob binary")
@@ -157,7 +164,8 @@ def build_sketch(df, col: str, make_sketch: Callable[[], object],
     (merged,), rows = collect_and_merge(
         parts, [make_sketch], _num_plan_partitions(sel), tree_merge_at)
     metrics = [
-        {"partition_id": r["partition_id"], "rows": r["rows"], "wall_ms": r["wall_ms"]}
+        {"partition_id": r["partition_id"], "rows": r["rows"],
+         "wall_ms": r["wall_ms"], "merged_groups": r["merged_groups"]}
         for r in rows
     ]
     return merged, metrics
@@ -235,7 +243,8 @@ def build_flagged_sketches(df, specs: list[tuple],
         tree_merge_at)
     metrics = [
         {"partition_id": r["partition_id"], "sketch_id": r["sketch_id"],
-         "rows": r["rows"], "wall_ms": r["wall_ms"]}
+         "rows": r["rows"], "wall_ms": r["wall_ms"],
+         "merged_groups": r["merged_groups"]}
         for r in rows
     ]
     return merged, metrics

@@ -145,9 +145,19 @@ def bloom_might_contain_udf(spark, sketch: "BloomSketch | bytes"):
 #: and are combined/persisted by executors.
 BLOOM_MAX_PARTIAL_BITS = 1 << 31
 
+#: Refuse Bloom builds whose combine would hold more than this many
+#: bytes of partials at once (ADVICE r7). Each partial is n_bits/8
+#: bytes, and the combine holds one per source partition when the
+#: driver collects them directly (P <= tree_merge_at), or ceil(sqrt(P))
+#: per merge group (and on the driver) above it — so a bound on each
+#: partial alone still let ~256 partitions of 256 MiB partials reach
+#: the driver as ~64 GB.
+BLOOM_MAX_COMBINE_BYTES = 4 << 30
+
 
 def _check_bloom_geometry(capacity: int, fpp: float,
-                          max_partial_bits: int) -> None:
+                          max_partial_bits: int, n_partitions: int,
+                          tree_merge_at: int) -> None:
     # arithmetic ONLY (the BloomSketch sizing formula, never an
     # allocation): instantiating a sketch just to read n_bits would
     # attempt the full bit-array malloc — for the absurd capacities
@@ -166,6 +176,18 @@ def _check_bloom_geometry(capacity: int, fpp: float,
             f"bounded BloomSketch per shard, capacity_hint per shard) or "
             f"use operators.sharded.build_sharded_cuckoo_filter, whose "
             f"per-shard blobs stay ~2.1 B/key and never transit the driver")
+    fan_in = (n_partitions if n_partitions <= tree_merge_at
+              else math.ceil(math.sqrt(n_partitions)))
+    if n_bits // 8 * fan_in > BLOOM_MAX_COMBINE_BYTES:
+        raise ValueError(
+            f"build_bloom_deferred: {n_partitions} partitions of "
+            f"{n_bits >> 23} MiB partials put {fan_in} partials "
+            f"({n_bits // 8 * fan_in >> 20} MiB) in one combine — above "
+            f"BLOOM_MAX_COMBINE_BYTES ({BLOOM_MAX_COMBINE_BYTES >> 20} "
+            f"MiB). Use operators.sharded.build_sharded_cuckoo_filter, "
+            f"whose per-shard blobs stay ~2.1 B/key and are combined by "
+            f"executors, or shard the keyspace (one bounded BloomSketch "
+            f"per shard, capacity_hint per shard)")
 
 
 def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
@@ -189,7 +211,8 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
     ``build_sketch`` path runs.
 
     Returns (BloomSketch, metrics) like ``build_sketch``. Geometry is
-    bounded by ``max_partial_bits`` — see BLOOM_MAX_PARTIAL_BITS; the
+    bounded by ``max_partial_bits`` — see BLOOM_MAX_PARTIAL_BITS — and,
+    with the input partition count, by BLOOM_MAX_COMBINE_BYTES; the
     combine itself goes through base.collect_and_merge (direct driver
     reduce at local partition counts, one executor-side tree level
     above TREE_MERGE_AT partitions).
@@ -202,8 +225,10 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
     )
 
     tma = TREE_MERGE_AT if tree_merge_at is None else tree_merge_at
+    n_parts = _num_plan_partitions(df.select(key_col))
     if capacity_hint is not None:
-        _check_bloom_geometry(capacity_hint, fpp, max_partial_bits)
+        _check_bloom_geometry(capacity_hint, fpp, max_partial_bits, n_parts,
+                              tma)
         return build_sketch(
             df, key_col,
             lambda: BloomSketch(capacity=max(capacity_hint, 64), fpp=fpp),
@@ -222,7 +247,7 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
         eager=False)  # lazy: the count below materializes it (one job,
     # not checkpoint-job + count-job); the partial pass reads the blocks
     n = hashed.count()  # materializes + counts the checkpoint, not the source
-    _check_bloom_geometry(n, fpp, max_partial_bits)
+    _check_bloom_geometry(n, fpp, max_partial_bits, n_parts, tma)
     schema = ("partition_id int, sketch_id int, rows bigint, "
               "wall_ms double, blob binary")
 
@@ -246,9 +271,10 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
     parts = hashed.mapInPandas(partial, schema)
     (merged,), rows = collect_and_merge(
         parts, [lambda: BloomSketch(capacity=max(n, 64), fpp=fpp)],
-        _num_plan_partitions(hashed), tma)
+        n_parts, tma)
     metrics = [
         {"partition_id": r["partition_id"], "rows": r["rows"],
-         "wall_ms": r["wall_ms"]} for r in rows
+         "wall_ms": r["wall_ms"], "merged_groups": r["merged_groups"]}
+        for r in rows
     ]
     return merged, metrics

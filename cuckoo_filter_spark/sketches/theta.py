@@ -276,7 +276,8 @@ def build_theta_sketches(
         TREE_MERGE_AT if tree_merge_at is None else tree_merge_at)
     metrics = [
         {"partition_id": r["partition_id"], "sketch_id": r["sketch_id"],
-         "rows": r["rows"], "wall_ms": r["wall_ms"]}
+         "rows": r["rows"], "wall_ms": r["wall_ms"],
+         "merged_groups": r["merged_groups"]}
         for r in rows
     ]
     return merged, metrics

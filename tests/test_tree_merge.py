@@ -29,6 +29,26 @@ def test_tree_merge_equals_direct_collect(spark):
     assert sum(m["rows"] for m in m_direct) == sum(m["rows"] for m in m_tree)
 
 
+def test_tree_merge_rows_say_their_shape(spark):
+    """Metrics rows mark which side of TREE_MERGE_AT made them: per-
+    partition partials carry merged_groups=0, group rows the group
+    count (ceil(sqrt(8)) = 3 groups for 8 partitions)."""
+    from cuckoo_filter_spark.sketches import HLLSketch
+    from cuckoo_filter_spark.sketches.base import build_sketch
+    from cuckoo_filter_spark.sketches.theta import build_theta_sketches
+
+    df = _keys(spark)
+    _, below = build_sketch(df, "key", lambda: HLLSketch(p=12),
+                            tree_merge_at=8)
+    _, above = build_sketch(df, "key", lambda: HLLSketch(p=12),
+                            tree_merge_at=7)
+    assert len(below) == 8 and {m["merged_groups"] for m in below} == {0}
+    assert {m["merged_groups"] for m in above} == {3}
+    assert sorted(m["partition_id"] for m in above) == [0, 1, 2]
+    _, theta = build_theta_sketches(df, ["key"], k=64, tree_merge_at=7)
+    assert {m["merged_groups"] for m in theta} == {3}
+
+
 def test_tree_merge_theta_and_bloom_equal(spark):
     from cuckoo_filter_spark.sketches.bloom import build_bloom_deferred
     from cuckoo_filter_spark.sketches.theta import build_theta_sketches
@@ -85,6 +105,43 @@ def test_bloom_capacity_bound_raises(spark):
     assert sk.contains(pd.Series(["k1", "nope"])).tolist() == [True, False]
 
 
+@pytest.mark.parametrize("n_parts, refused", [
+    (128, False),     # 128 x 32 MiB = 4 GiB collected: at the budget
+    (129, True),      # one partial more
+    (256, True),      # direct collect of 256 partials
+    (257, False),     # tree level: ceil(sqrt(257)) = 17 per merge group
+    (16_384, False),  # 128 per merge group
+    (16_385, True),   # 129 per merge group
+])
+def test_bloom_combine_budget_counts_partitions(spark, monkeypatch, n_parts,
+                                                refused):
+    """ADVICE r7: the per-partial bound alone let ~256 partitions of
+    256 MiB partials reach the driver. The combine fan-in (P partials
+    below TREE_MERGE_AT, ceil(sqrt(P)) above) times the partial size is
+    refused past BLOOM_MAX_COMBINE_BYTES, naming the sharded build. P is
+    stubbed; the capacity sizes a 2^28-bit (32 MiB) partial."""
+    import cuckoo_filter_spark.sketches.base as base
+    from cuckoo_filter_spark.sketches.bloom import (
+        BLOOM_MAX_COMBINE_BYTES,
+        _check_bloom_geometry,
+        build_bloom_deferred,
+    )
+
+    cap = 20_000_000  # fpp 0.01 -> 1.9e8 bits -> 2^28
+    assert BLOOM_MAX_COMBINE_BYTES == 4 << 30
+    if refused:
+        with pytest.raises(ValueError, match="build_sharded_cuckoo_filter"):
+            _check_bloom_geometry(cap, 0.01, 1 << 31, n_parts, 256)
+    else:
+        _check_bloom_geometry(cap, 0.01, 1 << 31, n_parts, 256)
+    # the public build reads P from the plan (stubbed) before any job
+    monkeypatch.setattr(base, "_num_plan_partitions", lambda df: n_parts)
+    df = _keys(spark, n=100, parts=2)
+    if refused:
+        with pytest.raises(ValueError, match="build_sharded_cuckoo_filter"):
+            build_bloom_deferred(df, "key", fpp=0.01, capacity_hint=cap)
+
+
 def test_canon_int_keys_fails_loud():
     """ADVICE r6: non-integral float keys and 2^53-overflow batches must
     raise instead of silently mis-hashing."""
@@ -102,7 +159,8 @@ def test_canon_int_keys_fails_loud():
 
 
 @pytest.mark.parametrize("api", [
-    "build_probe", "sharded_probe", "delete", "theta", "hll", "mg",
+    "build_probe", "sharded_probe", "arrow_build_probe", "delete", "theta",
+    "hll", "mg",
 ])
 def test_null_batches_keep_int_key_identity(spark, api):
     """VERDICT r6 #4: every public key-consuming API answers identically
@@ -147,6 +205,25 @@ def test_null_batches_keep_int_key_identity(spark, api):
         b_mx = build_sharded_cuckoo_filter(mixed, "key", num_shards=4)
         assert (b_eq.contain(probes) == b_mx.contain(probes)).all()
         assert b_mx.contain(probes)[:5].all()
+    elif api == "arrow_build_probe":
+        # the sharded build hashes from Arrow buffers (mapInArrow; the
+        # NULL-bearing partitions arrive as int64 with a validity
+        # bitmap) and the broadcast probe is an Arrow UDF — both must
+        # agree with the pandas-side driver probe
+        from cuckoo_filter_spark.operators.sharded import (
+            build_sharded_cuckoo_filter,
+            sharded_might_contain_udf,
+        )
+
+        b_eq = build_sharded_cuckoo_filter(equiv, "key", num_shards=4)
+        b_mx = build_sharded_cuckoo_filter(mixed, "key", num_shards=4)
+        pdf = spark.createDataFrame(
+            [(int(v),) for v in probe_vals] + [(None,)], "key bigint")
+        got = [r["m"] for r in pdf.select(
+            sharded_might_contain_udf(spark, b_mx)(F.col("key")).alias("m"))
+            .collect()]
+        assert got[:-1] == b_eq.contain(probes).tolist()
+        assert got[:5] == [True] * 5 and got[-1] is False
     elif api == "delete":
         from cuckoo_filter_spark.operators.sharded import (
             build_sharded_cuckoo_filter,
