@@ -16,8 +16,7 @@ Two implementations:
   layout). The 32-byte block recurrence runs batched across all rows
   that still have blocks left, and the tail branches (16/8/4/2/1 bytes)
   are applied to the rows whose length has that bit. No per-row Python
-  in the hot loop (only the last few rows of a long block run finish in
-  Python ints) and no padded per-row copy: memory is O(key bytes).
+  in the hot loop and no padded per-row copy: memory is O(key bytes).
 
 :func:`metro64_keys` is the membership-key entry point every build,
 probe, router and delete shares: it cleans a key batch (NULLs out,
@@ -48,20 +47,6 @@ def _rotr(x: int, r: int) -> int:
     return ((x >> r) | (x << (64 - r))) & _MASK64
 
 
-def _block_rounds(data, v0: int, v1: int, v2: int, v3: int):
-    """The 32-byte block recurrence over every whole block of ``data``."""
-    for off in range(0, len(data) - 31, 32):
-        v0 = (v0 + int.from_bytes(data[off : off + 8], "little") * _K0) & _MASK64
-        v0 = (_rotr(v0, 29) + v2) & _MASK64
-        v1 = (v1 + int.from_bytes(data[off + 8 : off + 16], "little") * _K1) & _MASK64
-        v1 = (_rotr(v1, 29) + v3) & _MASK64
-        v2 = (v2 + int.from_bytes(data[off + 16 : off + 24], "little") * _K2) & _MASK64
-        v2 = (_rotr(v2, 29) + v0) & _MASK64
-        v3 = (v3 + int.from_bytes(data[off + 24 : off + 32], "little") * _K3) & _MASK64
-        v3 = (_rotr(v3, 29) + v1) & _MASK64
-    return v0, v1, v2, v3
-
-
 def metro64(data: bytes, seed: int = DEFAULT_SEED) -> int:
     """Scalar MetroHash64 (seed defaults to the filter's 1337)."""
     h = ((seed + _K2) * _K0) & _MASK64
@@ -69,8 +54,17 @@ def metro64(data: bytes, seed: int = DEFAULT_SEED) -> int:
     off = 0
 
     if n >= 32:
-        v0, v1, v2, v3 = _block_rounds(data, h, h, h, h)
-        off = n - n % 32
+        v0 = v1 = v2 = v3 = h
+        while n - off >= 32:
+            v0 = (v0 + int.from_bytes(data[off : off + 8], "little") * _K0) & _MASK64
+            v0 = (_rotr(v0, 29) + v2) & _MASK64
+            v1 = (v1 + int.from_bytes(data[off + 8 : off + 16], "little") * _K1) & _MASK64
+            v1 = (_rotr(v1, 29) + v3) & _MASK64
+            v2 = (v2 + int.from_bytes(data[off + 16 : off + 24], "little") * _K2) & _MASK64
+            v2 = (_rotr(v2, 29) + v0) & _MASK64
+            v3 = (v3 + int.from_bytes(data[off + 24 : off + 32], "little") * _K3) & _MASK64
+            v3 = (_rotr(v3, 29) + v1) & _MASK64
+            off += 32
         v2 ^= (_rotr(((v0 + v3) * _K0 + v1) & _MASK64, 37) * _K1) & _MASK64
         v3 ^= (_rotr(((v1 + v2) * _K1 + v0) & _MASK64, 37) * _K0) & _MASK64
         v0 ^= (_rotr(((v0 + v2) * _K0 + v3) & _MASK64, 37) * _K1) & _MASK64
@@ -330,11 +324,6 @@ def xxh64_long_batch(h: np.ndarray, seed: int = SPARK_XXHASH64_SEED) -> np.ndarr
     return out
 
 
-# Rows still in the block loop at or below which the remaining blocks
-# run as Python ints (one numpy round costs about ten scalar blocks).
-_SCALAR_ROWS = 8
-
-
 def metro64_flat(flat: np.ndarray, lens: np.ndarray, seed: int = DEFAULT_SEED) -> np.ndarray:
     """MetroHash64 of each row of a flat byte run (row i is the next
     ``lens[i]`` bytes) → uint64[n].
@@ -381,15 +370,6 @@ def metro64_flat(flat: np.ndarray, lens: np.ndarray, seed: int = DEFAULT_SEED) -
             v0, v1, v2, v3 = hr.copy(), hr.copy(), hr.copy(), hr.copy()
             for k in range(maxb):
                 a = int(active[k])
-                if a <= _SCALAR_ROWS:
-                    # a few long rows left: a numpy round costs more than
-                    # their remaining blocks in Python ints
-                    for j in range(a):
-                        o, end = int(base[j]) + 32 * k, int(base[j] + 32 * nblocks[j])
-                        v0[j], v1[j], v2[j], v3[j] = _block_rounds(
-                            memoryview(buf)[o:end], int(v0[j]), int(v1[j]),
-                            int(v2[j]), int(v3[j]))
-                    break
                 o = base[:a] + 32 * k
                 x0, x1, x2, x3 = v0[:a], v1[:a], v2[:a], v3[:a]
                 x0[:] = _rotr_np(x0 + words[o] * _NK0, 29) + x2

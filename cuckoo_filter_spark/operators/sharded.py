@@ -53,8 +53,8 @@ from cuckoo_filter_spark.operators.build import (
 from cuckoo_filter_spark.params import TABLE_SINGLE, CuckooParams
 
 # Pair rows (one per (partition, shard)) and filter rows (one per shard)
-# as the Arrow record batches mapInArrow exchanges; PAIRS_SCHEMA and
-# SHARD_SCHEMA are the same schemas in Spark's terms.
+# as the Arrow schemas the emitter and combiner exchange; PAIRS_SCHEMA
+# and SHARD_SCHEMA are the same schemas in Spark's terms.
 _PAIRS_ARROW = pa.schema([
     ("shard", pa.int32()), ("src_partition", pa.int32()), ("n", pa.int64()),
     ("rows", pa.int64()), ("distinct_keys", pa.int64()), ("blob", pa.binary())])
@@ -277,49 +277,31 @@ def _pair_emitter(params: CuckooParams, key_col: str, num_shards: int, unique: b
 
 
 def _shard_combiner(params: CuckooParams, unique: bool):
-    """mapInArrow over pair rows sorted by (shard, src_partition): runs
-    the kick-loop combine for one shard at a time (the sort makes each
-    shard's rows contiguous, so only that shard's pairs are held) and
-    emits one filter blob row per shard. The src_partition order makes
-    the combine order, and so the blob bytes, deterministic."""
+    """Grouped applyInArrow: runs the kick-loop combine over ONE shard's
+    pair rows (only that shard's pairs are held) and returns its filter
+    blob row. Combining in src_partition order makes the blob bytes
+    deterministic."""
 
-    def finish(shard: int, bis: list, tgs: list, n: int, dk, t0: float):
+    def combine(pairs: pa.Table) -> pa.Table:
+        t0 = time.perf_counter()
+        shard = pairs.column("shard")[0].as_py()
         kern = CuckooKernel(params, seed=0x1337C0FFEE ^ shard)
-        bi = np.concatenate(bis) if bis else np.zeros(0, dtype=np.int64)
-        tg = np.concatenate(tgs) if tgs else np.zeros(0, dtype=np.uint32)
-        stored = kern.insert_pairs(bi, tg, dedupe=unique)
-        wall_ms = (time.perf_counter() - t0) * 1000.0
-        return pa.RecordBatch.from_pydict(
-            {"shard": [shard], "rows": [n], "stored": [stored],
-             # None when the emitter did not count raw keys
-             # (non-unique_global builds)
-             "distinct_keys": [dk], "kicks": [kern.kicks],
-             "victim_used": [kern.victim_used],
-             "load_factor": [kern.load_factor()], "wall_ms": [wall_ms],
+        blobs = pairs.column("blob").to_pylist()
+        order = np.argsort(pairs.column("src_partition").to_numpy(), kind="stable")
+        bis, tgs = zip(*(unpack_pairs(blobs[i]) for i in order))
+        stored = kern.insert_pairs(np.concatenate(bis), np.concatenate(tgs),
+                                   dedupe=unique)
+        # None when the emitter did not count raw keys (non-unique_global)
+        dks = [d for d in pairs.column("distinct_keys").to_pylist() if d is not None]
+        return pa.Table.from_pydict(
+            {"shard": [shard], "rows": [sum(pairs.column("n").to_pylist())],
+             "stored": [stored], "distinct_keys": [sum(dks) if dks else None],
+             "kicks": [kern.kicks], "victim_used": [kern.victim_used],
+             "load_factor": [kern.load_factor()],
+             "wall_ms": [(time.perf_counter() - t0) * 1000.0],
              "blob": [kern.to_bytes()],
              "format_version": [SHARD_FORMAT_VERSION]},
             schema=_SHARD_ARROW)
-
-    def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        shard = None
-        for batch in batches:
-            blobs = batch.column("blob")
-            for i, (s, n, dk) in enumerate(zip(
-                    *(batch.column(c).to_pylist()
-                      for c in ("shard", "n", "distinct_keys")))):
-                if s != shard:
-                    if shard is not None:
-                        yield finish(shard, bis, tgs, n_pairs, dk_sum, t0)
-                    shard, bis, tgs, n_pairs, dk_sum = s, [], [], 0, None
-                    t0 = time.perf_counter()
-                bi, tg = unpack_pairs(blobs[i].as_py())
-                bis.append(bi)
-                tgs.append(tg)
-                n_pairs += n
-                if dk is not None:
-                    dk_sum = (dk_sum or 0) + dk
-        if shard is not None:
-            yield finish(shard, bis, tgs, n_pairs, dk_sum, t0)
 
     return combine
 
@@ -331,13 +313,12 @@ def combine_shards(pairs: DataFrame, params: CuckooParams, unique: bool,
     Shard s is combined by task ``s mod P`` with P = min(num_shards,
     defaultParallelism): placement by shard id gives every task the same
     number of shards (within one), where hash partitioning of the ids
-    does not (32 shards on 4 tasks landed 10/10/7/5). Within a task the
-    rows are sorted by (shard, src_partition) and combined one shard at
-    a time."""
+    does not (32 shards on 4 tasks landed 10/10/7/5). The grouping
+    reuses that placement (no second shuffle) and hands the combiner one
+    shard at a time."""
     p = min(num_shards, pairs.sparkSession.sparkContext.defaultParallelism)
-    return (pairs.repartitionById(p, "shard")
-            .sortWithinPartitions("shard", "src_partition")
-            .mapInArrow(_shard_combiner(params, unique), SHARD_SCHEMA))
+    return (pairs.repartitionById(p, "shard").groupBy("shard")
+            .applyInArrow(_shard_combiner(params, unique), SHARD_SCHEMA))
 
 
 def build_sharded_cuckoo_filter(

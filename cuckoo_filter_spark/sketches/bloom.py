@@ -15,7 +15,7 @@ import struct
 import numpy as np
 import pandas as pd
 
-from cuckoo_filter_spark.hashing import metro64_batch
+from cuckoo_filter_spark.hashing import metro64_keys
 
 _MAGIC = b"BLM1"
 
@@ -47,14 +47,12 @@ class BloomSketch:
 
     # -- shared Arrow-batch update path --
     def update(self, items) -> None:
-        # NULL keys are EXCLUDED (the cuckoo-build convention): a NULL
-        # string slot has zero Arrow length and would hash identically
-        # to '' (phantom member), and a NULL numeric key crashes the
-        # flat-bytes path
-        vals = items if isinstance(items, pd.Series) else pd.Series(items)
-        vals = vals.dropna()
-        if len(vals):
-            self.update_hashed(metro64_batch(vals))
+        # key identity is the cuckoo filter's (metro64_keys): NULL keys
+        # are excluded, never hashed as '', and an int key hashes the
+        # same in a NULL-bearing (float64-rendered) batch
+        h, _ = metro64_keys(items)
+        if len(h):
+            self.update_hashed(h)
 
     def _positions(self, h: np.ndarray) -> np.ndarray:
         h1 = (h >> np.uint64(32)).astype(np.uint64)
@@ -69,7 +67,10 @@ class BloomSketch:
         self.n_items += len(h)
 
     def contains(self, items) -> np.ndarray:
-        return self.contains_hashed(metro64_batch(items))
+        h, valid = metro64_keys(items)
+        out = np.zeros(len(valid), dtype=bool)  # NULL keys answer False
+        out[valid] = self.contains_hashed(h)
+        return out
 
     def contains_hashed(self, h: np.ndarray) -> np.ndarray:
         pos = self._positions(h)  # [k, n]
@@ -238,10 +239,9 @@ def build_bloom_deferred(df, key_col: str, fpp: float = 0.01,
 
     def hasher(batches):
         for pdf in batches:
-            vals = pdf[key_col].dropna()  # same NULL exclusion as update()
-            if len(vals):
-                yield pd.DataFrame(
-                    {"h": metro64_batch(vals).view(np.int64)})
+            h, _ = metro64_keys(pdf[key_col])  # the key identity of update()
+            if len(h):
+                yield pd.DataFrame({"h": h.view(np.int64)})
 
     hashed = df.select(key_col).mapInPandas(hasher, "h bigint").localCheckpoint(
         eager=False)  # lazy: the count below materializes it (one job,

@@ -1,4 +1,4 @@
-"""Shard combine placement and byte stability.
+"""Shard combine placement, one-shard combine calls and byte stability.
 
 ``combine_shards`` places shard s on combine task ``s mod P`` with
 P = min(num_shards, defaultParallelism), and the shard blobs must stay
@@ -96,3 +96,28 @@ def test_checkpointed_build_blobs_match_golden(spark, urls, tmp_path):
     b = build_checkpointed(urls, "url", str(tmp_path / "ck"),
                            capacity=N_URLS, num_shards=32)
     assert _digest(load_sharded_blobs(spark, b.path)) == GOLDEN[(32, "unique_local")]
+
+
+def test_combiner_call_holds_one_shard(spark, urls, monkeypatch):
+    """With many shards per task (256 shards on 4 tasks) every combiner
+    call gets exactly one shard's pair rows: no batch spans shards, so a
+    combine holds one shard's pairs whatever the shards per task."""
+    import cuckoo_filter_spark.operators.sharded as sh
+
+    combiner = sh._shard_combiner
+
+    def one_shard_only(params, unique):
+        fn = combiner(params, unique)
+
+        def combine(pairs):
+            shards = set(pairs.column("shard").to_pylist())
+            if len(shards) != 1:
+                raise AssertionError(f"combiner call spans shards {sorted(shards)}")
+            return fn(pairs)
+
+        return combine
+
+    monkeypatch.setattr(sh, "_shard_combiner", one_shard_only)
+    b = sh.build_sharded_cuckoo_filter(urls, "url", capacity=N_URLS,
+                                       num_shards=256)
+    assert sorted(b.blobs) == list(range(256))
