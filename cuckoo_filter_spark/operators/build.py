@@ -6,18 +6,16 @@ aggregates: a per-partition *partial* is computed inside ``mapInPandas``
 partials are combined with the associative merge (SURVEY.md §2.3 —
 sound because the alt-index is an involution, cuckoofilter.go:105-108).
 
-Two partial representations:
-
-* ``sparse`` (default) — a partial is the array of (bucket, tag) pairs
-  (locally deduped in unique modes). This is a cuckoo filter whose
-  eviction work is deferred: insertion order is free, so running the
-  kick loop once at combine time yields the same membership. Partial
-  size ∝ keys in the partition (8 bytes/key), NOT table size — at 10^12
-  rows the collected/shuffled volume is the data's fingerprint volume,
-  and no executor ever materializes a full table during the scan.
-* ``table`` — a partial is a full-size filter blob (§1.5 bytes); merge
-  is merge-by-reinsertion of occupied slots. Demonstrates blob-level
-  merge associativity; preferred when partials are reused standalone.
+A partial is sparse: the array of (bucket, tag) pairs (locally
+deduped in unique modes), or the raw 64-bit hashes when the table is
+sized at combine time. This is a cuckoo filter whose eviction work is
+deferred: insertion order is free, so running the kick loop once at
+combine time yields the same membership. Partial size ∝ keys in the
+partition (8 bytes/key), NOT table size — at 10^12 rows the
+collected/shuffled volume is the data's fingerprint volume, and no
+executor ever materializes a full table during the scan. (Blob-level
+merge of finished filters is ``CuckooKernel.merge``, which the
+incremental streaming build uses.)
 
 Scale notes (100 TB / 10^12 rows):
 * plain/unique_local modes are shuffle-free: partials build on the scan
@@ -34,7 +32,6 @@ from __future__ import annotations
 import struct
 import time
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -253,7 +250,7 @@ def canon_dedupe_pairs(params: CuckooParams, bi: np.ndarray,
                        tags: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Keep the first occurrence per canonical (bucket-pair, tag) —
     set semantics on the fingerprint space; orientation-independent via
-    the alt involution. Shared by the sparse builder, the shard pair
+    the alt involution. Shared by the pair partial builder, the shard pair
     emitter and the deferred-route explode (one definition, one future
     fix)."""
     if len(bi) == 0:
@@ -278,9 +275,16 @@ def key_hashes(col, hash_fn: str) -> tuple[np.ndarray, np.ndarray]:
     return metro64_keys(col)
 
 
-def _sparse_partial_builder(params: CuckooParams, key_col: str, unique: bool,
-                            hash_fn: str = "metro64", count_keys: bool = False):
-    """mapInPandas: fingerprint + locally dedupe; emit (bucket, tag) pairs.
+def _partial_builder(key_col: str, unique: bool, hash_fn: str = "metro64",
+                     count_keys: bool = False,
+                     params: CuckooParams | None = None):
+    """mapInPandas partial over a partition's non-NULL keys, 8 B/key.
+
+    With ``params`` it emits (bucket, tag) pairs, locally deduped on the
+    canonical pair in unique modes. Without, it emits the raw 64-bit
+    hashes (deduped in unique modes): the table is then sized at combine
+    time from the DEDUPED global count — one scan total, no separate
+    count() pass, and sized on distinct keys rather than row count.
 
     count_keys: additionally dedupe on the RAW key value (vectorized
     DistinctAccum) and report the count as ``distinct_keys``.
@@ -289,59 +293,6 @@ def _sparse_partial_builder(params: CuckooParams, key_col: str, unique: bool,
     the raw-key count is exact within the partition (and globally exact
     under ``unique_global`` co-location, COUNT(DISTINCT) null semantics:
     nulls/NaN excluded)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        rows = 0
-        t0 = time.perf_counter()
-        bis: list[np.ndarray] = []
-        tgs: list[np.ndarray] = []
-        seen: DistinctAccum | None = DistinctAccum() if count_keys else None
-        for pdf in batches:
-            # NULL keys are EXCLUDED (the library convention; a NULL
-            # string slot would alias '' and a NULL numeric slot
-            # crashes the flat-bytes path); rows counts non-null keys
-            keys = pdf[key_col].dropna()
-            if len(keys) == 0:
-                continue
-            rows += len(keys)
-            if seen is not None:
-                seen.add(keys)
-            idx, tag = params.split(key_hashes(keys, hash_fn)[0])
-            bis.append(idx)
-            tgs.append(tag)
-        bi = np.concatenate(bis) if bis else np.zeros(0, dtype=np.int64)
-        tags = np.concatenate(tgs) if tgs else np.zeros(0, dtype=np.uint32)
-        if unique:
-            bi, tags = canon_dedupe_pairs(params, bi, tags)
-        wall_ms = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "rows": [rows],
-                "stored": [len(bi)],
-                "distinct_keys": [len(seen) if seen is not None else None],
-                "kicks": [0],
-                "victim_used": [False],
-                "load_factor": [len(bi) / params.size_in_tags],
-                "wall_ms": [wall_ms],
-                "blob": [pack_pairs(bi, tags)],
-            }
-        )
-
-    return build
-
-
-def _hash_partial_builder(key_col: str, unique: bool, hash_fn: str = "metro64",
-                          count_keys: bool = False):
-    """mapInPandas partial that emits raw 64-bit hashes (8 B/key, the
-    same volume as split pairs) instead of (bucket, tag) pairs. Used
-    when no capacity hint exists: table params are then sized at combine
-    time from the DEDUPED global count — one scan total, no separate
-    count() pass, and the table is sized on distinct keys rather than
-    row count (tighter at high duplication)."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -363,52 +314,18 @@ def _hash_partial_builder(key_col: str, unique: bool, hash_fn: str = "metro64",
                 seen.add(keys)
             hs.append(key_hashes(keys, hash_fn)[0])
         h = np.concatenate(hs) if hs else np.zeros(0, dtype=np.uint64)
-        if unique and len(h):
-            h = np.unique(h)  # same-key copies share a hash; canon-space
-            # dedupe happens again at insert time with the final params
-        wall_ms = (time.perf_counter() - t0) * 1000.0
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "rows": [rows],
-                "stored": [len(h)],
-                "distinct_keys": [len(seen) if seen is not None else None],
-                "kicks": [0],
-                "victim_used": [False],
-                "load_factor": [None],  # table not sized yet
-                "wall_ms": [wall_ms],
-                "blob": [pack_hashes(h)],
-            }
-        )
-
-    return build
-
-
-def _table_partial_builder(params: CuckooParams, key_col: str, unique: bool,
-                           count_keys: bool = False):
-    """mapInPandas: one full-size partial filter blob per partition."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        kern = CuckooKernel(params, seed=0x1337C0FFEE ^ pid)
-        rows = 0
-        stored = 0
-        t0 = time.perf_counter()
-        seen: DistinctAccum | None = DistinctAccum() if count_keys else None
-        for pdf in batches:
-            # NULL keys are EXCLUDED (the library convention; a NULL
-            # string slot would alias '' and a NULL numeric slot
-            # crashes the flat-bytes path); rows counts non-null keys
-            keys = pdf[key_col].dropna()
-            if len(keys) == 0:
-                continue
-            rows += len(keys)
-            if seen is not None:
-                seen.add(keys)
-            ok = kern.add_unique(keys) if unique else kern.add(keys)
-            stored += int(ok.sum())
+        if params is None:
+            # same-key copies share a hash; canon-space dedupe happens
+            # again at insert time with the final params
+            if unique and len(h):
+                h = np.unique(h)
+            stored, load, blob = len(h), None, pack_hashes(h)
+        else:
+            bi, tags = params.split(h)
+            if unique:
+                bi, tags = canon_dedupe_pairs(params, bi, tags)
+            stored, blob = len(bi), pack_pairs(bi, tags)
+            load = stored / params.size_in_tags
         wall_ms = (time.perf_counter() - t0) * 1000.0
         yield pd.DataFrame(
             {
@@ -416,11 +333,11 @@ def _table_partial_builder(params: CuckooParams, key_col: str, unique: bool,
                 "rows": [rows],
                 "stored": [stored],
                 "distinct_keys": [len(seen) if seen is not None else None],
-                "kicks": [kern.kicks],
-                "victim_used": [kern.victim_used],
-                "load_factor": [kern.load_factor()],
+                "kicks": [0],
+                "victim_used": [False],
+                "load_factor": [load],
                 "wall_ms": [wall_ms],
-                "blob": [kern.to_bytes()],
+                "blob": [blob],
             }
         )
 
@@ -529,7 +446,6 @@ def build_cuckoo_filter(
     bits_per_item: int = 16,
     table_type: int = TABLE_SINGLE,
     mode: str = "unique_local",
-    partial_format: str = "sparse",
     num_partitions: int | None = None,
     headroom: float = DEFAULT_HEADROOM,
     params: CuckooParams | None = None,
@@ -539,12 +455,10 @@ def build_cuckoo_filter(
 ) -> CuckooBuild:
     """Build one global cuckoo filter over ``df[key_col]``.
 
-    capacity: expected number of keys. If None with sparse partials
-    (default), sizing is DEFERRED: partials carry raw 64-bit hashes and
-    the table is sized at combine time from the deduped count — one
-    scan total (no count() pass) and tighter tables under duplication.
-    If None with table partials, a column-pruned ``df.count()`` runs
-    first (full-size partial blobs need upfront params).
+    capacity: expected number of keys. If None (and no ``params``),
+    sizing is DEFERRED: partials carry raw 64-bit hashes and the table
+    is sized at combine time from the deduped count — one scan total
+    (no count() pass) and tighter tables under duplication.
 
     mode:
     * ``unique_local`` (default) — set semantics for membership filters:
@@ -576,12 +490,11 @@ def build_cuckoo_filter(
     8 B/key of pair blobs to the driver, a driver OOM at 10^9+ keys.
     ``might_contain_udf`` and the semi/anti joins accept both build
     types, so the routing is transparent to query code. Not applied to
-    explicit ``params`` or ``partial_format='table'``. ``None``
-    disables. ``unique_global`` routes like the rest (the
-    repartition(key) co-location and the shard shuffle compose): the
-    routed build carries the exact distinct count in
-    ``build.distinct_keys``; callers that only need the COUNT should use
-    :func:`count_distinct_exact`, which never emits blobs at all.
+    explicit ``params``. ``None`` disables. ``unique_global`` routes
+    like the rest (the repartition(key) co-location and the shard
+    shuffle compose): the routed build carries the exact distinct count
+    in ``build.distinct_keys``; callers that only need the COUNT should
+    use :func:`count_distinct_exact`, which never emits blobs at all.
 
     shard_output_path: where a ROUTED build's shard blobs are written
     (by the executors; only metrics rows reach the driver). Without it
@@ -591,12 +504,9 @@ def build_cuckoo_filter(
     """
     if mode not in ("unique_local", "unique_global", "multiset"):
         raise ValueError(f"unknown mode {mode!r}")
-    if partial_format not in ("sparse", "table"):
-        raise ValueError(f"unknown partial_format {partial_format!r}")
     if hash_fn not in ("metro64", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    may_route = (auto_shard is not None and params is None
-                 and partial_format == "sparse")
+    may_route = auto_shard is not None and params is None
     if may_route and capacity is not None and capacity > auto_shard:
         from cuckoo_filter_spark.operators.sharded import (
             build_sharded_cuckoo_filter,
@@ -619,8 +529,6 @@ def build_cuckoo_filter(
     if hash_fn == "xxhash64":
         from pyspark.sql import functions as F
 
-        if partial_format != "sparse":
-            raise ValueError("hash_fn='xxhash64' requires partial_format='sparse'")
         # drop nulls BEFORE hashing: F.xxhash64(NULL) = seed 42 (a
         # non-null bigint) would store a phantom fingerprint — the
         # metro64 route's notna() null exclusion must hold here too
@@ -628,12 +536,10 @@ def build_cuckoo_filter(
             F.xxhash64(key_col).alias(key_col))
         inner_hash = "__prehashed__"
     sel = df.select(key_col)
-    # No capacity hint + sparse partials → defer table sizing to combine
-    # time (partials carry raw hashes): avoids a dedicated count() scan.
-    deferred = params is None and capacity is None and partial_format == "sparse"
+    # No capacity hint → defer table sizing to combine time (partials
+    # carry raw hashes): avoids a dedicated count() scan.
+    deferred = params is None and capacity is None
     if params is None and not deferred:
-        if capacity is None:
-            capacity = sel.count()  # table partials need upfront params
         params = CuckooParams.for_capacity(
             max(int(capacity * headroom), 64), tags_per_bucket,
             bits_per_item, table_type)  # dispatches vacuum sizing
@@ -648,13 +554,9 @@ def build_cuckoo_filter(
 
     unique = mode != "multiset"
     count_keys = mode == "unique_global"
-    if deferred:
-        builder = _hash_partial_builder(key_col, unique, inner_hash, count_keys)
-    elif partial_format == "sparse":
-        builder = _sparse_partial_builder(params, key_col, unique, inner_hash,
-                                          count_keys)
-    else:
-        builder = _table_partial_builder(params, key_col, unique, count_keys)
+    # deferred sizing: params is None, so the partials carry raw hashes
+    builder = _partial_builder(key_col, unique, inner_hash, count_keys,
+                               params)
     parts = sel.mapInPandas(builder, BUILD_SCHEMA)
     if deferred and may_route:
         # observe the (partition-deduped) key count from the tiny metric
@@ -704,16 +606,10 @@ def build_cuckoo_filter(
                            metrics=metrics, hash_fn=hash_fn)
 
     merged = CuckooKernel(params)
-    if partial_format == "sparse":
-        pairs = [unpack_pairs(bytes(r["blob"])) for r in rows if r["rows"] > 0]
-        if pairs:
-            bi = np.concatenate([p[0] for p in pairs])
-            tags = np.concatenate([p[1] for p in pairs])
-            merged.insert_pairs(bi, tags, dedupe=unique)
-    else:
-        kernels = (
-            CuckooKernel.from_bytes(bytes(r["blob"])) for r in rows if r["rows"] > 0
-        )
-        merged = reduce(lambda a, b: a.merge(b, dedupe=unique), kernels, merged)
+    pairs = [unpack_pairs(bytes(r["blob"])) for r in rows if r["rows"] > 0]
+    if pairs:
+        bi = np.concatenate([p[0] for p in pairs])
+        tags = np.concatenate([p[1] for p in pairs])
+        merged.insert_pairs(bi, tags, dedupe=unique)
     return CuckooBuild(params=params, blob=merged.to_bytes(), metrics=metrics,
                        hash_fn=hash_fn)

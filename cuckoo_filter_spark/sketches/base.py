@@ -15,7 +15,7 @@ run a serial million-iteration reduce loop on the driver, VERDICT r6
 #1) ONE distributed tree level merges each of ~sqrt(P) groups in
 ``applyInPandas`` first — only blob rows cross that Exchange, and the
 driver then collects/reduces O(sqrt(P)) rows (same shape as
-rollup._merge_level and the sharded cuckoo combine).
+cube._merge_level and the sharded cuckoo combine).
 """
 
 from __future__ import annotations

@@ -27,12 +27,12 @@ from cuckoo_filter_spark.params import CuckooParams
 def run_dedup_batches(pdfs, key_col, cols, on_overflow: str,
                       shard_capacity: int, params, shard_key,
                       kern_holder: list):
-    """The dedup micro-batch core, SHARED by both stateful APIs
-    (applyInPandasWithState here, transformWithStateInPandas in
-    dedup_tws) so the overflow/at-least-once semantics can never
-    diverge between them. The kernel lives in ``kern_holder[0]``: read
-    at entry, final state written back (generators can't return it) —
-    one source of truth, no duplicated positional/holder coupling."""
+    """The dedup micro-batch core: one definition of the overflow /
+    at-least-once semantics, tested on its own apart from the
+    applyInPandasWithState wrapper. The kernel lives in
+    ``kern_holder[0]``: read at entry, final state written back
+    (generators can't return it) — one source of truth, no duplicated
+    positional/holder coupling."""
     kern = kern_holder[0]
     for pdf in pdfs:
         if len(pdf) == 0:

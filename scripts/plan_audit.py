@@ -142,7 +142,7 @@ def main() -> None:
     # NATURAL input partitions — MapInPandas sits directly on the pruned
     # scan with ZERO Exchange (the exact-rollup alternative Expands the
     # input (k+1)× and shuffles raw keys per cube level)
-    from cuckoo_filter_spark.sketches.rollup import _partial_emitter
+    from cuckoo_filter_spark.sketches.cube import _partial_emitter
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     partials = ev.select("event_type", "user_id").mapInPandas(

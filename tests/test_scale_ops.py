@@ -344,73 +344,6 @@ def test_audio_features_24bit_pcm(spark):
     assert abs(r["peak"] - amp) < 0.01
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_streaming_dedup_tws_gate_without_protobuf(spark):
-    """Without google.protobuf (this container), the tws path must fail
-    LOUD at plan time with a pointer to the applyInPandasWithState
-    implementation — never an opaque worker crash mid-query."""
-    if _has_protobuf():
-        pytest.skip("protobuf present — runtime path covered by "
-                    "test_streaming_dedup_tws")
-    from cuckoo_filter_spark.streaming.dedup_tws import streaming_dedup_tws
-
-    stream = spark.readStream.schema("rid long, url string").parquet(
-        "/tmp/does_not_matter_*.parquet")
-    with pytest.raises(ImportError, match="applyInPandasWithState"):
-        streaming_dedup_tws(stream, "url")
-
-
-def test_streaming_dedup_tws(spark, tmp_path):
-    """Same dedup contract through the Spark 4.x stateful API
-    (transformWithStateInPandas + ValueState blob); requires the RocksDB
-    state store provider, set for this query and restored after."""
-    if not _has_protobuf():
-        pytest.skip("transformWithState needs google.protobuf "
-                    "(not shipped in this container); the loud gate is "
-                    "tested instead")
-    from cuckoo_filter_spark.streaming.dedup_tws import streaming_dedup_tws
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [(i % 40, f"url{i % 40}") for i in range(200)], "rid long, url string"
-    ).write.parquet(f"{src}/batch0.parquet")
-
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        stream = spark.readStream.schema("rid long, url string").parquet(
-            src + "/*.parquet")
-        deduped = streaming_dedup_tws(stream, "url", num_shards=4,
-                                      shard_capacity=10000)
-        q = (
-            deduped.writeStream.format("memory").queryName("dedup_tws_out")
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .trigger(availableNow=True).start()
-        )
-        assert q.awaitTermination(120)
-        out = spark.sql("select * from dedup_tws_out").collect()
-        urls = [r["url"] for r in out]
-        assert len(urls) == len(set(urls)) == 40
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
-
-
 def test_frame_sample_and_resize_guard_degenerate_metadata(spark):
     """Corrupt media metadata must not produce phantom work or ANSI
     crashes: a 0-frame video would emit frame_idx=0 via the descending

@@ -118,3 +118,65 @@ def test_output_name_collision_raises(spark, events):
                        ["event_type", bad], "user_id")
     with pytest.raises(ValueError, match="collide"):
         hll_rollup(events, ["event_type", "user_id"], "user_id")
+    # gid is hll_grouping_sets' marker, not rollup's: a group column of
+    # that name is an ordinary column here
+    as_gid = hll_rollup(events.withColumnRenamed("day", "gid"),
+                        ["event_type", "gid"], "user_id")
+    assert as_gid.columns == ["event_type", "gid", "lvl", "est_distinct"]
+    plain = hll_rollup(events, ["event_type", "day"], "user_id")
+    assert sorted(map(tuple, as_gid.collect()), key=repr) == sorted(
+        map(tuple, plain.collect()), key=repr)
+
+
+def test_rollup_is_grouping_sets_over_prefixes(spark, events):
+    """hll_rollup is hll_grouping_sets over the prefix sets
+    (g1..gk), …, (): same groups and blob bytes, with
+    lvl = k − popcount(gid)."""
+    from cuckoo_filter_spark.sketches.cube import hll_grouping_sets
+
+    cols = ["event_type", "day"]
+    got = hll_rollup(events, cols, "user_id", p=12, keep_blobs=True)
+    assert got.columns == [*cols, "lvl", "est_distinct", "blob"]
+    gs = hll_grouping_sets(events, cols, [cols[:j] for j in (2, 1, 0)],
+                           "user_id", p=12, keep_blobs=True)
+    rollup_rows = sorted(
+        (r["event_type"] or "", r["day"] or "", r["lvl"], bytes(r["blob"]))
+        for r in got.collect())
+    gs_rows = sorted(
+        (r["event_type"] or "", r["day"] or "",
+         len(cols) - bin(r["gid"]).count("1"), bytes(r["blob"]))
+        for r in gs.collect())
+    assert rollup_rows == gs_rows
+    assert {r[2] for r in rollup_rows} == {0, 1, 2}
+
+
+def _plan_nodes(df, name: str) -> int:
+    """Count ``name`` nodes in the final adaptive plan of a collected
+    frame (the Initial Plan section is cut off)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return sum(1 for line in final.splitlines()
+               if line.lstrip(" :+-").startswith(name + " "))
+
+
+def test_rollup_plan_is_a_lazy_level_chain(spark, events, monkeypatch):
+    """Two group columns: one localCheckpoint (the finest level), then
+    level 1 merges from it and the grand total merges from level 1's
+    blobs — 2 Exchange nodes and 1 ReusedExchange in the final plan,
+    the counts the hand-written rollup loop had before it became a case
+    of the grouping-sets core. A grand total merged from the finest
+    level instead would show no ReusedExchange."""
+    df_cls = type(events)
+    real = df_cls.localCheckpoint
+    calls = []
+
+    def counting(self, *a, **k):
+        calls.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", counting)
+    got = hll_rollup(events, ["event_type", "day"], "user_id", p=12)
+    got.collect()
+    assert len(calls) == 1
+    assert _plan_nodes(got, "Exchange") == 2
+    assert _plan_nodes(got, "ReusedExchange") == 1

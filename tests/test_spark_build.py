@@ -190,17 +190,25 @@ def test_count_distinct_exact_no_blob_collect(spark, monkeypatch):
 
 
 def test_auto_shard_respects_exclusions(spark):
-    """explicit params / table partials never route."""
+    """explicit params never route, even with a declared capacity above
+    auto_shard: the caller chose one table, so one table comes back."""
     from pyspark.sql import functions as F
 
-    from cuckoo_filter_spark.operators.build import build_cuckoo_filter
-    from cuckoo_filter_spark.operators.sharded import ShardedCuckooBuild
+    from cuckoo_filter_spark.operators.build import (
+        CuckooBuild,
+        build_cuckoo_filter,
+    )
+    from cuckoo_filter_spark.params import CuckooParams
 
     df = spark.range(12_000).select(
         F.concat(F.lit("x"), F.col("id")).alias("key"))
-    b = build_cuckoo_filter(df, "key", capacity=12_000,
-                            partial_format="table", auto_shard=5_000)
-    assert not isinstance(b, ShardedCuckooBuild)
+    params = CuckooParams.for_capacity(14_000, 4, 16, 0)
+    b = build_cuckoo_filter(df, "key", capacity=12_000, params=params,
+                            auto_shard=5_000)
+    assert isinstance(b, CuckooBuild)
+    assert b.params == params
+    keys = pd.Series([f"x{i}" for i in range(12_000)])
+    assert b.kernel().contain(keys).all()
 
 
 def test_auto_shard_unique_global_routes(spark):

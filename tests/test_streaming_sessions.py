@@ -15,20 +15,6 @@ from cuckoo_filter_spark.streaming.sessions import (
 US = 1_000_000
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-# ---------------------------------------------------------------------------
-# pure core
-# ---------------------------------------------------------------------------
-
-
 def test_merge_core_gap_boundary_and_backward_extension():
     gap = 60 * US
     # exactly gap apart MERGES (strictly-greater rule); gap+1µs splits
@@ -241,11 +227,5 @@ def test_streaming_sessionize_null_keys_dropped(spark, tmp_path):
 def test_streaming_sessionize_validation_and_tws_gate(spark):
     stream = spark.readStream.schema("ts timestamp, uid string").parquet(
         "/tmp/does_not_matter_sess_*.parquet")
-    with pytest.raises(ValueError, match="unknown api"):
-        streaming_sessionize(stream, "uid", "ts", 60.0, api="nope")
     with pytest.raises(ValueError, match="gap_seconds"):
         streaming_sessionize(stream, "uid", "ts", 0.0)
-    if _has_protobuf():
-        pytest.skip("protobuf present — tws runtime covered elsewhere")
-    with pytest.raises(ImportError, match="applyInPandasWithState"):
-        streaming_sessionize(stream, "uid", "ts", 60.0, api="tws")
